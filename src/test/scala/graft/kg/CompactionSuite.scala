@@ -25,14 +25,30 @@ class CompactionSuite extends AnyFunSuite {
     Seq(row("c.scala", "Batch engine calls function sortTree.")),
     Seq(row("d.scala", "Parse tree extends class mainLib. IndexSet uses scanList.")))
 
-  private def ingest(cfg: GraftConfig): ParquetTableIO = {
+  /** Ingests `batches` into a fresh store; `beforeLast` gets the store's
+    * root just before the last batch. */
+  private def ingest(cfg: GraftConfig,
+      beforeLast: String => Unit = _ => ()): ParquetTableIO = {
     val s = spark; import s.implicits._
-    val io = new ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("graftcompact").toString)
-    batches.foreach { b =>
+    val root = java.nio.file.Files.createTempDirectory("graftcompact").toString
+    val io = new ParquetTableIO(root)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      if (i == batches.size - 1) beforeLast(root)
       new Pipeline(cfg).materialize(spark.createDataset(b), io)
     }
     io
+  }
+
+  /** Data-file paths of `table`, relative to the table dir. */
+  private def dataFiles(root: String, table: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(root, table)
+    val it = java.nio.file.Files.walk(dir).iterator()
+    val out = Set.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.toString.endsWith(".parquet")) out += dir.relativize(p).toString
+    }
+    out.result()
   }
 
   private def state(io: ParquetTableIO, table: String): Set[String] = {
@@ -76,15 +92,31 @@ class CompactionSuite extends AnyFunSuite {
   }
 
   test("saturation gate crosses to full rebuild and back without state drift") {
-    // nb=2 makes any real batch's affected names reach both buckets, so
-    // the default deltaSaturationFraction=0.5 gate (threshold: >1 bucket)
-    // routes batches 2-3 to the full-rebuild branch; fraction=1.0
-    // disables the gate and keeps the delta path. All three runs must
-    // land on identical canonical state — the gate is a plan choice only.
-    val base = GraftConfig(linkMode = "lsh", linkThreshold = 0.7, numBuckets = 2)
-    val gated = ingest(base) // gate fires (delta entry point, full plan)
+    // The shipped deltaSaturationFraction is 0.75: a batch whose names
+    // reach more than 0.75·nb buckets goes to the full rebuild. The gated
+    // run sets it to 0.0, so batches 2-3 cross the gate (delta entry
+    // point, full plan); 1.0 disables it and keeps the delta path. All
+    // three runs must land on identical canonical state — the gate is a
+    // plan choice only. nb=8, not a saturating nb=2: only where the delta
+    // path is selective does the routing show in the files it keeps.
+    val base = GraftConfig(linkMode = "lsh", linkThreshold = 0.7, numBuckets = 8)
+    // the routing, from file survival across the last batch: a full
+    // rebuild rewrites every canonical_edges file, the delta path keeps
+    // the files of the buckets it does not touch
+    def ingestTracked(cfg: GraftConfig): (ParquetTableIO, Set[String]) = {
+      var root = ""
+      var before = Set.empty[String]
+      val io = ingest(cfg, r => { root = r; before = dataFiles(r, "canonical_edges") })
+      assert(before.nonEmpty, "no canonical_edges before the last batch")
+      (io, before intersect dataFiles(root, "canonical_edges"))
+    }
+    val (gated, gatedKept) = ingestTracked(base.copy(deltaSaturationFraction = 0.0))
     val full = ingest(base.copy(fullCompaction = true))
-    val delta = ingest(base.copy(deltaSaturationFraction = 1.0)) // gate off
+    val (delta, deltaKept) = ingestTracked(base.copy(deltaSaturationFraction = 1.0)) // gate off
+    assert(gatedKept.isEmpty,
+      "saturation gate did not fire: the last batch kept canonical_edges files")
+    assert(deltaKept.nonEmpty,
+      "gate-off run rewrote every canonical_edges file: delta path not taken")
     Seq("canonical_edges", "canonical_edge_entity_index", "vertices",
       "canonical_map").foreach { t =>
       assert(state(gated, t) == state(full, t),
@@ -402,6 +434,40 @@ class CompactionSuite extends AnyFunSuite {
     assert(io.read(spark, "t").count() == 21)
     // partition pruning still works over the appended layout
     assert(io.read(spark, "t").filter(col("pb") === 1).count() == 6)
+  }
+
+  test("partitioned writes: one file per dir, spread over several write tasks") {
+    val s = spark; import s.implicits._
+    // the regression this pins only shows under AQE, which would coalesce
+    // a count-less clustering shuffle into one writer task
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val root = java.nio.file.Files.createTempDirectory("graftpwrite").toString
+    val io = new ParquetTableIO(root)
+    val nb = 8
+    def frame(tag: String) = (0 until 64).map(i => (s"$tag$i", i % nb)).toDF("k", "pb")
+    def files(t: String): Map[Int, Set[String]] = (0 until nb).map { b =>
+      b -> new java.io.File(s"$root/$t/pb=$b").listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    }.toMap
+    // `part-<NNNNN>-`: NNNNN is the id of the task that wrote the file
+    def check(what: String, perDir: Map[Int, Set[String]]): Unit = {
+      assert(perDir.values.forall(_.size == 1), s"$what: not one file per dir: $perDir")
+      val tasks = perDir.values.flatten.map(_.split('-')(1)).toSet
+      assert(tasks.size > 1, s"$what: every dir written by one task ($tasks)")
+    }
+    io.overwrite(spark, "o", frame("a"), Seq("pb"))
+    check("overwrite", files("o"))
+    io.overwritePartitions(spark, "o", frame("b"), "pb", 0 until nb)
+    check("overwritePartitions", files("o"))
+    // the first appendNew lays the table down; the second takes the
+    // physical append path and adds one file per touched dir
+    io.appendNew(spark, "a", frame("a"), Seq("k"), Seq("pb"))
+    val before = files("a")
+    io.appendNew(spark, "a", frame("b"), Seq("k"), Seq("pb"))
+    check("appendNew", files("a").map { case (b, f) => b -> (f -- before(b)) })
+    assert(io.read(spark, "a").count() == 128)
+    assert(io.read(spark, "o").select("k").as[String].collect().toSet ==
+      (0 until 64).map(i => s"b$i").toSet)
   }
 
   test("appendNew compacts sliver files past the per-dir threshold") {

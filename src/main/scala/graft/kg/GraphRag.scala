@@ -53,14 +53,12 @@ final class GraphRag(
     }
   }
 
-  /** Result of [[query]]. Each side is a LAZY plan: building the hits
-    * side is not free — [[Retrieval.hybridSearch]] pins its two topK
-    * branches with `localCheckpoint(eager = false)`, and constructing
-    * the checkpoint RDD under AQE executes the plan's shuffle stages —
-    * so a caller consuming only the triplets must not pay for a hits
-    * frame it never reads (measured on the 250k bench store: 1.93 s per
-    * triplets-only query of which the triplet lookup itself was 0.15 s,
-    * graft.tools.RelProbe; the rest was the eagerly-built hits side).
+  /** Result of [[query]]. Each side is a LAZY thunk: building the hits
+    * side runs the searches — [[Retrieval.hybridSearch]] and
+    * [[Retrieval.withContext]] collect their top-k lists and fetch chunk
+    * rows on the driver, and return a local frame — so a caller
+    * consuming only the triplets must not pay for a hits side it never
+    * reads.
     *
     * CONSUME-BEFORE-MUTATE contract (ADVICE r7): because the sides are
     * thunks over the facade's table handles, a result must be consumed
@@ -210,29 +208,24 @@ final class GraphRag(
     def hits: DataFrame = {
       val terms = table("terms")
       val rank = if (ranking.nonEmpty) ranking else if (idfWeighting) "idf" else "tf"
-      def termHits = rank match {
-        case "idf"  => retrieval.termSearchIdf(terms, chunksDs, q, topK)
-        case "bm25" => retrieval.termSearchBm25(terms, chunksDs, q, topK)
-        case _      => retrieval.termSearch(terms, chunksDs, q, topK)
-      }
-      val vectorHits =
-        if (vectorMode == "ann" && tableExists("chunk_vec_index") &&
-            // a MISSING sidecar (legacy index, geometry unknowable) or one
-            // from a DIFFERENT index geometry (plane-count mismatch) means
-            // the store predates the current layout — fall back to the
-            // exact scan until an ingest/rebuild migrates the index
-            // (Pipeline's geometry-upgrade path)
-            annThresholds.exists(
-              _.length == graft.kg.retrieve.VectorIndex.NumPlanes))
-          Some(retrieval.vectorSearchAnn(
-            table("chunk_vec_index"), chunksDs, q, topK,
-            thresholds = annThresholds.get))
-        else None
-      if (withContext) {
-        // §3.3: graph-only retrieval + ±contextSize range-join expansion
-        val graphHits = termHits.select(col("chunkId"), col("score"))
-        retrieval.withContext(graphHits, chunksDs, config.contextSize)
-      } else {
+      // scores-only sides: each is a top-k (chunkId, score) list the
+      // driver-side merge collects; texts are fetched once, for the winners
+      val termHits = retrieval.termScores(terms, chunksDs, q, topK, rank)
+      if (withContext) // §3.3: graph-only retrieval + ±contextSize expansion
+        retrieval.withContext(termHits, chunksDs, config.contextSize)
+      else {
+        val vectorHits =
+          if (vectorMode == "ann" && tableExists("chunk_vec_index") &&
+              // a MISSING sidecar (legacy index, geometry unknowable) or one
+              // from a DIFFERENT index geometry (plane-count mismatch) means
+              // the store predates the current layout — fall back to the
+              // exact scan until an ingest/rebuild migrates the index
+              // (Pipeline's geometry-upgrade path)
+              annThresholds.exists(
+                _.length == graft.kg.retrieve.VectorIndex.NumPlanes))
+            Some(retrieval.vectorScoresAnn(
+              table("chunk_vec_index"), q, topK, thresholds = annThresholds.get))
+          else None
         retrieval.hybridSearch(terms, chunksDs, embeddingsDs, q, topK,
           termHits = Some(termHits), vectorHits = vectorHits)
       }

@@ -16,9 +16,9 @@ trait GraphTableIO extends Serializable {
   def read(spark: SparkSession, table: String): DataFrame
   /** Upsert `delta` into `table` keyed by `keys` (idempotent).
     * `partitionCols` is the physical layout (SURVEY.md §4.4: edges by
-    * pred-hash bucket, vertices by name-hash bucket — in production these
-    * are Iceberg `bucket(N, col)` partition transforms; in the sandbox,
-    * plain partition columns). */
+    * subject-hash bucket `sbucket`, vertices by name-hash bucket — in
+    * production these are Iceberg `bucket(N, col)` partition transforms;
+    * in the sandbox, plain partition columns). */
   def merge(spark: SparkSession, table: String, delta: DataFrame,
       keys: Seq[String], partitionCols: Seq[String] = Nil): Unit
   /** Replace `table` with `df` (full rewrite — the compaction write path).

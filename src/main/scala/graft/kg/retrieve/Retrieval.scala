@@ -4,9 +4,13 @@ import graft.kg._
 import graft.kg.embed.Embedder
 import graft.kg.pipeline.Pipeline
 import graft.kg.textspec.{Stopwords, Tokens}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Query-side retrieval (reference `core/retrieval.py`), re-expressed as
   * single DataFrame programs over the materialized tables instead of
@@ -68,130 +72,119 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
       terms.filter(col("tbucket").isin(buckets: _*) || col("tbucket").isNull)
     }
 
-  /** A1 term search: query terms → term-edge equi-join → SUM per chunk →
-    * top-k (`retrieval.py:193-229`). `terms` = (chunkId, text, termType);
-    * the query-term list is tiny → broadcast. */
-  def termSearch(terms: DataFrame, chunks: Dataset[Chunk], query: String,
-      topK: Int = config.topK): DataFrame = {
-    val spark = terms.sparkSession
-    import spark.implicits._
-    val qTerms = Tokens.normalize(query).filterNot(Stopwords.english.contains).distinct
-    if (qTerms.isEmpty) // full result schema, zero rows
-      return chunks.toDF().select($"chunkId", lit(0.0).as("score"), $"text").limit(0)
-    val tfCol = tfScore(terms)
-    pruneTermBuckets(terms, qTerms)
-      .filter($"termType" === "unigram" && $"text".isin(qTerms: _*))
-      .groupBy($"chunkId")
-      .agg(tfCol.as("score"))
-      .join(chunks.toDF().select($"chunkId", $"text"), Seq("chunkId"))
-      .orderBy($"score".desc, $"chunkId")
-      .limit(topK)
-  }
-
-  /** A1 variant: DF-weighted term relevance. The reference ranks term
-    * search with Lucene fulltext scores (`retrieval.py:204-218`); raw TF
-    * ([[termSearch]]) is the documented spec substitution — this option
-    * adds the IDF weight a Lucene-like ranking carries:
-    * score(chunk) = Σ_t tf(t, chunk) · ln(N / df(t)), N = chunk count,
-    * df = chunks containing t. All partial-aggregable + two broadcast
-    * scalars — no extra shuffles beyond [[termSearch]]'s. */
-  def termSearchIdf(terms: DataFrame, chunks: Dataset[Chunk], query: String,
-      topK: Int = config.topK): DataFrame = {
-    val spark = terms.sparkSession
-    import spark.implicits._
-    val qTerms = Tokens.normalize(query).filterNot(Stopwords.english.contains).distinct
-    if (qTerms.isEmpty)
-      return chunks.toDF().select($"chunkId", lit(0.0).as("score"), $"text").limit(0)
-    val tfCol = tfScore(terms)
-    val hits = pruneTermBuckets(terms, qTerms)
-      .filter($"termType" === "unigram" && $"text".isin(qTerms: _*))
-    val tf = hits.groupBy($"chunkId", $"text").agg(tfCol.as("tf"))
-    val dfreq = tf.groupBy($"text")
-      .agg(count(lit(1)).cast("double").as("df")) // tf rows are distinct (chunk, term)
-    val n = chunks.toDF().agg(count(lit(1)).cast("double").as("n_chunks"))
-    tf.join(broadcast(dfreq), Seq("text"))
-      .crossJoin(broadcast(n))
-      .select($"chunkId", ($"tf" * log($"n_chunks" / $"df")).as("w"))
-      .groupBy($"chunkId").agg(sum($"w").as("score"))
-      .join(chunks.toDF().select($"chunkId", $"text"), Seq("chunkId"))
-      .orderBy($"score".desc, $"chunkId")
-      .limit(topK)
-  }
-
-  /** A1 variant: full BM25 ranking (Robertson/Sparck-Jones IDF + tf
-    * saturation k1 + length normalization b) — the closest shape to the
-    * Lucene fulltext score the reference delegates to
-    * (`retrieval.py:204-218`). score(chunk) =
+  /** A1 per-chunk term relevance as an unordered (chunkId, score) frame
+    * (`retrieval.py:193-229`; zero rows for a stopword-only query):
+    * "tf" (default) sums TF per chunk; "idf" is Σ_t tf · ln(N / df), the
+    * DF weight of a Lucene-like ranking; "bm25" is
     * Σ_t ln(1 + (N-df+0.5)/(df+0.5)) · tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)),
-    * dl = chunk token count, avgdl its mean. All partial-aggregable plus
-    * two broadcast scalars — no extra shuffles beyond [[termSearchIdf]]. */
-  def termSearchBm25(terms: DataFrame, chunks: Dataset[Chunk], query: String,
-      topK: Int = config.topK, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = terms.sparkSession
-    import spark.implicits._
+    * dl = chunk token count — the closest shape to the Lucene fulltext
+    * score the reference delegates to (`retrieval.py:204-218`). All
+    * partial-aggregable plus broadcast scalars. */
+  private def termScored(terms: DataFrame, chunks: Dataset[Chunk], query: String,
+      ranking: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val c = chunks.toDF()
     val qTerms = Tokens.normalize(query).filterNot(Stopwords.english.contains).distinct
-    if (qTerms.isEmpty)
-      return chunks.toDF().select($"chunkId", lit(0.0).as("score"), $"text").limit(0)
+    if (qTerms.isEmpty) return c.select(col("chunkId"), lit(0.0).as("score")).limit(0)
     val hits = pruneTermBuckets(terms, qTerms)
-      .filter($"termType" === "unigram" && $"text".isin(qTerms: _*))
-    val tf = hits.groupBy($"chunkId", $"text").agg(tfScore(terms).as("tf"))
-    val dfreq = tf.groupBy($"text")
+      .filter(col("termType") === "unigram" && col("text").isin(qTerms: _*))
+    if (ranking != "idf" && ranking != "bm25")
+      return hits.groupBy(col("chunkId")).agg(tfScore(terms).as("score"))
+    val tf = hits.groupBy(col("chunkId"), col("text")).agg(tfScore(terms).as("tf"))
+    val dfreq = tf.groupBy(col("text"))
       .agg(count(lit(1)).cast("double").as("df")) // tf rows are distinct (chunk, term)
-    val stats = chunks.toDF().agg(count(lit(1)).cast("double").as("n_chunks"),
-      avg($"nTokens").as("avgdl"))
-    tf.join(broadcast(dfreq), Seq("text"))
-      .join(chunks.toDF().select($"chunkId", $"nTokens".cast("double").as("dl")),
-        Seq("chunkId"))
-      .crossJoin(broadcast(stats))
-      .select($"chunkId",
-        (log(lit(1.0) + ($"n_chunks" - $"df" + 0.5) / ($"df" + 0.5)) *
-          ($"tf" * (k1 + 1.0)) /
-          ($"tf" + lit(k1) * (lit(1.0 - b) + lit(b) * $"dl" / $"avgdl"))).as("w"))
-      .groupBy($"chunkId").agg(sum($"w").as("score"))
-      .join(chunks.toDF().select($"chunkId", $"text"), Seq("chunkId"))
-      .orderBy($"score".desc, $"chunkId")
-      .limit(topK)
+    val weighted =
+      if (ranking == "idf")
+        tf.join(broadcast(dfreq), Seq("text"))
+          .crossJoin(broadcast(c.agg(count(lit(1)).cast("double").as("n_chunks"))))
+          .select(col("chunkId"), (col("tf") * log(col("n_chunks") / col("df"))).as("w"))
+      else
+        tf.join(broadcast(dfreq), Seq("text"))
+          .join(c.select(col("chunkId"), col("nTokens").cast("double").as("dl")),
+            Seq("chunkId"))
+          .crossJoin(broadcast(c.agg(count(lit(1)).cast("double").as("n_chunks"),
+            avg(col("nTokens")).as("avgdl"))))
+          .select(col("chunkId"),
+            (log(lit(1.0) + (col("n_chunks") - col("df") + 0.5) / (col("df") + 0.5)) *
+              (col("tf") * (k1 + 1.0)) /
+              (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+              .as("w"))
+    weighted.groupBy(col("chunkId")).agg(sum(col("w")).as("score"))
   }
 
-  /** O1 vector search: embed the query ("query: " prefix,
+  /** Top-k (chunkId, score, text) of a scored frame; the text join runs
+    * before the limit, so a hit with no chunk row never takes a slot. */
+  private def topWithText(scored: DataFrame, chunks: Dataset[Chunk], topK: Int): DataFrame =
+    scored.join(chunks.toDF().select(col("chunkId"), col("text")), Seq("chunkId"))
+      .orderBy(col("score").desc, col("chunkId"))
+      .limit(topK)
+
+  /** A1 term search, TF-ranked. `terms` = (chunkId, text, termType). */
+  def termSearch(terms: DataFrame, chunks: Dataset[Chunk], query: String,
+      topK: Int = config.topK): DataFrame =
+    topWithText(termScored(terms, chunks, query, "tf"), chunks, topK)
+
+  /** A1 term search, IDF-weighted. */
+  def termSearchIdf(terms: DataFrame, chunks: Dataset[Chunk], query: String,
+      topK: Int = config.topK): DataFrame =
+    topWithText(termScored(terms, chunks, query, "idf"), chunks, topK)
+
+  /** A1 term search, BM25-ranked. */
+  def termSearchBm25(terms: DataFrame, chunks: Dataset[Chunk], query: String,
+      topK: Int = config.topK, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    topWithText(termScored(terms, chunks, query, "bm25", k1, b), chunks, topK)
+
+  /** Scores-only term side: top-k (chunkId, score) under `ranking`
+    * ("tf" | "idf" | "bm25"), no chunk join — what [[hybridSearch]] and
+    * [[withContext]] collect. */
+  def termScores(terms: DataFrame, chunks: Dataset[Chunk], query: String,
+      topK: Int = config.topK, ranking: String = "tf"): DataFrame =
+    termScored(terms, chunks, query, ranking)
+      .orderBy(col("score").desc, col("chunkId"))
+      .limit(topK)
+
+  /** O1 vector side, scores only: embed the query ("query: " prefix,
     * `retrieval.py:93`), brute-force cosine over chunk embeddings,
-    * TakeOrderedAndProject top-k (`retrieval.py:107-161`). The query
-    * vector is a plan-time literal (broadcast with the codegen'd task
-    * binary) scored by the native dot_product expression — the scan stays
-    * columnar inside WholeStageCodegen instead of deserializing a
-    * ChunkEmbedding object per row; on unit vectors dot == cosine. */
-  def vectorSearch(embeddings: Dataset[ChunkEmbedding], chunks: Dataset[Chunk],
-      query: String, topK: Int = config.topK): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
+    * TakeOrderedAndProject top-k (`retrieval.py:107-161`) of
+    * (chunkId, score). The query vector is a plan-time literal (broadcast
+    * with the codegen'd task binary) scored by the native dot_product
+    * expression — the scan stays columnar inside WholeStageCodegen
+    * instead of deserializing a ChunkEmbedding object per row; on unit
+    * vectors dot == cosine. */
+  def vectorScores(embeddings: Dataset[ChunkEmbedding], query: String,
+      topK: Int = config.topK): DataFrame = {
     val qv = embedder.embedQuery(query)
-    val scored = embeddings.toDF().select($"chunkId",
-      graft.functions.VectorFunctions.dot_product($"vec", typedLit(qv)).as("score"))
-    // top-k BEFORE the text join: TakeOrderedAndProject on the scored
-    // scan, then a topK-row broadcast join — joining first would shuffle
-    // the full chunk table per query (Catalyst cannot push a limit
-    // through an inner join)
-    scored
-      .orderBy($"score".desc, $"chunkId")
+    embeddings.toDF()
+      .select(col("chunkId"),
+        graft.functions.VectorFunctions.dot_product(col("vec"), typedLit(qv)).as("score"))
+      .orderBy(col("score").desc, col("chunkId"))
       .limit(topK)
-      .join(chunks.toDF().select($"chunkId", $"text"), Seq("chunkId"))
-      .orderBy($"score".desc, $"chunkId")
   }
 
-  /** O1 vector search, ANN scale path: the query's LSH sign-sketch
-    * probe plan (query-directed multi-probe, computed driver-side —
-    * [[VectorIndex.queryBuckets]]) becomes a LITERAL disjunction over the
-    * `(l, vbucket)` PARTITION columns of the `chunk_vec_index` layout —
-    * the scan partition-prunes to L·probesPerTable of the L·2^K
-    * directories instead of reading every chunk vector
-    * ([[vectorSearch]] is the exact full-scan baseline; the reference's
-    * Qdrant search is itself approximate HNSW, `retrieval.py:107-161`).
-    * Candidates are re-scored with the EXACT native dot product, so
-    * precision is 1.0 — only recall is approximate (mean recall@10 vs
-    * read amplification measured in BENCH/BASELINE.md; defaults hit
-    * ~0.93 at ~0.8× the rows of the exact scan). */
-  def vectorSearchAnn(vecIndex: DataFrame, chunks: Dataset[Chunk],
-      query: String, topK: Int = config.topK,
+  /** O1 vector search: [[vectorScores]] with the chunk text attached.
+    * The top-k runs BEFORE the text join — joining first would shuffle
+    * the full chunk table per query (Catalyst cannot push a limit
+    * through an inner join). */
+  def vectorSearch(embeddings: Dataset[ChunkEmbedding], chunks: Dataset[Chunk],
+      query: String, topK: Int = config.topK): DataFrame =
+    vectorScores(embeddings, query, topK)
+      .join(chunks.toDF().select(col("chunkId"), col("text")), Seq("chunkId"))
+      .orderBy(col("score").desc, col("chunkId"))
+
+  /** O1 vector side, ANN scale path, scores only: the query's LSH
+    * sign-sketch probe plan ([[VectorIndex.queryBuckets]], driver-side)
+    * becomes a LITERAL disjunction over the `(l, vbucket)` PARTITION
+    * columns of `chunk_vec_index`, so the scan reads L·probesPerTable of
+    * the L·2^K directories (the reference's Qdrant search is itself
+    * approximate HNSW, `retrieval.py:107-161`). Candidates are re-scored
+    * with the EXACT dot product: precision is 1.0, only recall is
+    * approximate — [[VectorIndex.DefaultProbes]] gives mean recall@10 ≈
+    * 0.875 at ~0.57× the exact scan's rows (BENCH/BASELINE.md).
+    *
+    * Returns the top K·L (chunkId, score) rows, NOT deduplicated: a chunk
+    * colliding with the query in several tables repeats once per table
+    * with an IDENTICAL score, so deduplicating these rows yields the
+    * exact distinct top-K. */
+  def vectorScoresAnn(vecIndex: DataFrame, query: String, topK: Int = config.topK,
       probesPerTable: Int = VectorIndex.DefaultProbes,
       thresholds: Array[Double] = VectorIndex.zeroThresholds): DataFrame = {
     val qv = embedder.embedQuery(query)
@@ -201,105 +194,122 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     val pred = pairs.groupBy(_._1).map { case (l, bs) =>
       col("l") === lit(l) && col("vbucket").isin(bs.map(_._2).distinct: _*)
     }.reduce(_ || _)
+    // score FIRST (map-only over the pruned scan) and keep two narrow
+    // columns: TakeOrdered(K·L) moves dozens of rows, never the
+    // embedding payload
     vecIndex.filter(pred)
-      // score FIRST (map-only over the pruned scan), dedup after: a chunk
-      // colliding with the query in several tables carries the same score
-      // everywhere, and deduping on (chunkId, score) shuffles two narrow
-      // columns instead of the full embedding payload; the text join runs
-      // on the topK rows only (see vectorSearch)
       .select(col("chunkId"),
         graft.functions.VectorFunctions.dot_product(col("vec"), typedLit(qv))
           .as("score"))
-      // a chunk appears at most once per table with an IDENTICAL score,
-      // so the K-th distinct chunk ranks within the top K·L rows —
-      // TakeOrdered(K·L) first, then dedup the ≤ K·L survivors: the
-      // dedup exchange moves dozens of rows instead of the full pruned
-      // candidate set
       .orderBy(col("score").desc, col("chunkId"))
       .limit(topK * VectorIndex.NumTables)
+  }
+
+  /** O1 vector search, ANN path: [[vectorScoresAnn]] deduplicated to the
+    * top-k distinct chunks, with the chunk text attached. */
+  def vectorSearchAnn(vecIndex: DataFrame, chunks: Dataset[Chunk],
+      query: String, topK: Int = config.topK,
+      probesPerTable: Int = VectorIndex.DefaultProbes,
+      thresholds: Array[Double] = VectorIndex.zeroThresholds): DataFrame =
+    vectorScoresAnn(vecIndex, query, topK, probesPerTable, thresholds)
       .dropDuplicates("chunkId")
       .orderBy(col("score").desc, col("chunkId"))
       .limit(topK)
       .join(chunks.toDF().select(col("chunkId"), col("text")), Seq("chunkId"))
       .orderBy(col("score").desc, col("chunkId"))
-  }
 
-  /** A3 min-max normalization with all-equal → 1.0
-    * (`retrieval.py:550-569`), over a (chunkId, score, text) frame.
-    * Global min/max via partial-aggregable `agg` + broadcast crossJoin
-    * (SURVEY.md §2.7) — an empty `Window.partitionBy()` would plan a
-    * single-partition exchange, the classic scale-killer if this is ever
-    * reused on a large frame. */
-  def minMaxNormalize(results: DataFrame): DataFrame = {
-    val stats = results.agg(min(col("score")).as("mn"), max(col("score")).as("mx"))
-    results.crossJoin(broadcast(stats))
-      .withColumn("score",
-        when(col("mx") === col("mn"), lit(1.0))
-          .otherwise((col("score") - col("mn")) / (col("mx") - col("mn"))))
-      .drop("mn", "mx")
-  }
-
-  /** A4 weighted hybrid merge (`retrieval.py:574-605`): full-outer on
-    * chunkId, missing side 0.0, w*vec + (1-w)*graph, top-k.
-    * `termHits` overrides the graph side (e.g. the IDF-weighted ranking
-    * from [[termSearchIdf]]); default = TF [[termSearch]]. */
+  /** A4 weighted hybrid merge (`retrieval.py:550-605`) on the driver:
+    * each side frame — (chunkId, score), a few·topK rows — is collected,
+    * deduplicated on chunkId (best first) and cut to topK; ONE
+    * `chunkId IN (...)` fetch reads the texts of the ≤ 2·topK ids (an id
+    * with no chunk row drops out of its side); then A3 min-max per side
+    * (all-equal → 1.0, `retrieval.py:550-569`), w·vec + (1-w)·graph with
+    * a missing side as 0.0, top-k by (score desc, chunkId). The
+    * arithmetic is the SQL plan's, term for term, so the doubles are
+    * bit-identical to a Spark-side merge. Eager: returns a local
+    * (chunkId, score, text) frame. `termHits` / `vectorHits` replace the
+    * default sides ([[termScores]] TF, [[vectorScores]] exact), e.g. with
+    * an IDF/BM25 ranking or the ANN rows of [[vectorScoresAnn]]. */
   def hybridSearch(terms: DataFrame, chunks: Dataset[Chunk],
       embeddings: Dataset[ChunkEmbedding], query: String,
       topK: Int = config.topK, vectorWeight: Double = config.vectorWeight,
       termHits: Option[DataFrame] = None,
       vectorHits: Option[DataFrame] = None): DataFrame = {
-    // pin each topK-row hit frame before composing: min-max normalize
-    // consumes its input through TWO branches (the min/max agg and the
-    // re-scored projection) and the merge join adds more — Catalyst does
-    // not dedupe common subtrees across branches, so without the pin
-    // every branch re-executes the full search subtree (measured ~2× the
-    // query latency at a 250k-chunk store). LAZY checkpoint (eager =
-    // false): the topK rows materialize on the FIRST action and are
-    // shared by every later branch — an eager one would execute both
-    // searches at query-construction time, which callers that only
-    // consume the triplets side would pay for nothing.
-    val v = minMaxNormalize(
-      vectorHits.getOrElse(vectorSearch(embeddings, chunks, query, topK))
-        .localCheckpoint(eager = false)).as("v")
-    val g = minMaxNormalize(
-      termHits.getOrElse(termSearch(terms, chunks, query, topK))
-        .localCheckpoint(eager = false)).as("g")
-    v.select(col("chunkId"), col("score").as("vscore"), col("text").as("vtext"))
-      .join(g.select(col("chunkId"), col("score").as("gscore"), col("text").as("gtext")),
-        Seq("chunkId"), "full_outer")
-      .select(col("chunkId"),
-        (coalesce(col("vscore"), lit(0.0)) * vectorWeight +
-          coalesce(col("gscore"), lit(0.0)) * (1.0 - vectorWeight)).as("score"),
-        coalesce(col("vtext"), col("gtext")).as("text"))
-      .orderBy(col("score").desc, col("chunkId"))
-      .limit(topK)
+    def topList(side: DataFrame) = side.select("chunkId", "score").collect().toSeq
+      .map(r => (r.getString(0), r.getDouble(1))).sorted(ranked).distinctBy(_._1).take(topK)
+    val vSide = topList(vectorHits.getOrElse(vectorScores(embeddings, query, topK)))
+    val gSide = topList(termHits.getOrElse(termScores(terms, chunks, query, topK)))
+    val text = fetch(chunks, "chunkId", (vSide ++ gSide).map(_._1))
+      .map(c => c.chunkId -> c.text).toMap
+    def minMax(side: Seq[(String, Double)]) = {
+      val kept = side.filter(x => text.contains(x._1))
+      lazy val (mn, mx) = (kept.map(_._2).min, kept.map(_._2).max)
+      kept.map { case (id, s) => id -> (if (mx == mn) 1.0 else (s - mn) / (mx - mn)) }.toMap
+    }
+    val (v, g) = (minMax(vSide), minMax(gSide))
+    val rows = (v.keySet ++ g.keySet).toSeq
+      .map(id => (id, v.getOrElse(id, 0.0) * vectorWeight +
+        g.getOrElse(id, 0.0) * (1.0 - vectorWeight)))
+      .sorted(ranked).take(topK)
+      .map { case (id, score) => Row(id, score, text(id)) }
+    chunks.sparkSession.createDataFrame(rows.asJava, StructType(Seq(chunks.schema("chunkId"),
+      StructField("score", DoubleType, nullable = false), chunks.schema("text"))))
   }
 
-  /** §3.3 context expansion: the reference walks ±contextSize hops with
-    * 2·N bolt round trips per hit (`retrieval.py:373-467`); here it is a
-    * single range self-join on (docId, |Δindex| ≤ contextSize), with U2
-    * first-wins dedup (match score > context 0.0) and O4 matches-first
-    * ordering. `hits` = (chunkId, score). */
+  /** §3.3 context expansion (`retrieval.py:373-467`) on the driver: the
+    * reference walks ±contextSize hops with 2·N bolt round trips per hit;
+    * here ONE fetch reads the hits' chunk rows and ONE more the chunks of
+    * their docs, then the window (same doc, |Δindex| ≤ contextSize), U2
+    * dedup (a chunk reachable from several hits keeps its best score —
+    * match score > context 0.0; the match row wins a tie) and O4
+    * matches-first order (score desc, docId, index) run in plain Scala.
+    * A hit with no chunk row is dropped. `hits` = (chunkId, score) is
+    * COLLECTED to the driver, so it must be a top-k list (e.g.
+    * [[termScores]]), never a whole-table frame. Eager: returns a local
+    * (chunkId, text, index, docId, score, is_match) frame. */
   def withContext(hits: DataFrame, chunks: Dataset[Chunk],
       contextSize: Int = config.contextSize): DataFrame = {
-    val c = chunks.toDF()
-    val hitChunks = hits
-      .join(c, Seq("chunkId"))
-      .select(col("chunkId").as("hitId"), col("docId").as("hitDoc"),
-        col("index").as("hitIdx"), col("score"))
-    hitChunks
-      .join(c, col("docId") === col("hitDoc") &&
-        abs(col("index") - col("hitIdx")) <= contextSize)
-      .select(col("chunkId"), col("text"), col("index"), col("docId"),
-        when(col("chunkId") === col("hitId"), col("score")).otherwise(lit(0.0))
-          .as("score"),
-        (col("chunkId") === col("hitId")).as("is_match"))
-      // U2: a chunk reachable from several hits keeps its best score
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("chunkId")).orderBy(col("score").desc)))
-      .filter(col("rn") === 1).drop("rn")
-      .orderBy(col("score").desc, col("docId"), col("index"))
+    val best = hits.select("chunkId", "score").collect()
+      .groupMapReduce(_.getString(0))(_.getDouble(1))(math.max)
+    val hitChunks = fetch(chunks, "chunkId", best.keys.toSeq)
+    val byDoc = fetch(chunks, "docId", hitChunks.map(_.docId)).groupBy(_.docId)
+    val rows = hitChunks
+      .flatMap { h =>
+        byDoc(h.docId).filter(n => math.abs(n.index - h.index) <= contextSize).map { n =>
+          val isMatch = n.chunkId == h.chunkId
+          (n, if (isMatch) best(h.chunkId) else 0.0, isMatch)
+        }
+      }
+      .groupMapReduce(_._1.chunkId)(identity) { (a, b) =>
+        val bySc = SQLOrderingUtil.compareDoubles(a._2, b._2)
+        if (bySc > 0 || (bySc == 0 && a._3)) a else b
+      }
+      .values.toSeq
+      .sorted(Ordering.by[(Chunk, Double, Boolean), (Double, String, Int)](
+        r => (r._2, r._1.docId, r._1.index))(Ordering.Tuple3(scoreDesc, utf8, Ordering.Int)))
+      .map { case (n, score, isMatch) => Row(n.chunkId, n.text, n.index, n.docId, score, isMatch) }
+    chunks.sparkSession.createDataFrame(rows.asJava, StructType(
+      Seq("chunkId", "text", "index", "docId").map(chunks.schema(_)) ++ Seq(
+        StructField("score", DoubleType, nullable = false),
+        StructField("is_match", BooleanType, nullable = false))))
   }
+
+  /** The chunk rows whose `key` column is one of `values`: one
+    * `key IN (...)` scan, no job for an empty list. */
+  private def fetch(chunks: Dataset[Chunk], key: String, values: Seq[String]): Seq[Chunk] =
+    if (values.isEmpty) Nil
+    else chunks.filter(col(key).isin(values.distinct: _*)).collect().toSeq
+
+  /** Spark's `ORDER BY score DESC` and string order on the driver:
+    * doubles by SQL comparison (-0.0 == 0.0, NaN largest), strings by
+    * UTF-8 bytes (not Java's UTF-16 `compareTo`). */
+  private val scoreDesc: Ordering[Double] = (a, b) => SQLOrderingUtil.compareDoubles(b, a)
+  private val utf8: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  /** (chunkId, score) by (score desc, chunkId). */
+  private val ranked: Ordering[(String, Double)] =
+    Ordering.by[(String, Double), (Double, String)](x => (x._2, x._1))(
+      Ordering.Tuple2(scoreDesc, utf8))
 
   /** Entity search (reference `retrieval.py:231-263`): queries
     * `MENTIONS_ENTITY` relationships — which NOTHING in the reference
@@ -355,8 +365,9 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     * `ebucket = pmod(hash(entity), NumBuckets)`).
     *
     * The scan-based path reads the FULL edge table per query — edges are
-    * bucketed by pred hash only, so a by-entity filter prunes nothing and
-    * at 100× every query pays a full scan (the reference's lookup is
+    * bucketed by subject hash (`sbucket`), and an entity matching on
+    * either the subj or the obj side lies in any bucket, so the by-entity
+    * filter prunes nothing and at 100× every query pays a full scan (the reference's lookup is
     * per-entity indexed, `retrieval.py:265-314`). Here the query entities'
     * bucket ids are computed driver-side ([[bucketOfLit]] — the writer's
     * own Murmur3 `hash` expression constant-folded, no job) and pushed as

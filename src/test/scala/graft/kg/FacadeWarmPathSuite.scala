@@ -102,6 +102,44 @@ class FacadeWarmPathSuite extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("warm hybrid and context queries run at most 4 Spark jobs each") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val rag = new GraphRag(spark, new ParquetTableIO(root))
+    rag.ingest(corpusOf(
+      "Zebra imports Yonder. Zebra calls Xylem.",
+      "Yonder extends Walnut. Xylem uses Zebra."))
+    assert(new ParquetTableIO(root).exists(spark, "chunk_vec_meta"),
+      "the store has no ANN sidecar, so hybrid_ann would fall back to exact")
+    val q = "What does Zebra use?"
+    val kinds: Seq[(String, () => DataFrame)] = Seq(
+      "hybrid_exact" -> (() => rag.query(q, includeTriplets = false).chunks),
+      "hybrid_ann" -> (() => rag.query(q, includeTriplets = false, vectorMode = "ann").chunks),
+      "context" -> (() => rag.query(q, withContext = true, includeTriplets = false).chunks))
+    // count only the jobs of this thread's job group: Spark hands the
+    // group to the threads that run broadcasts and subqueries too
+    val group = "facade-warm-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try kinds.foreach { case (kind, run) =>
+      run().collect() // warm: table handles, num_buckets, ANN sidecar
+      spark.sparkContext.setJobGroup(group, kind)
+      try {
+        jobs.set(0)
+        assert(run().collect().nonEmpty, kind)
+        Thread.sleep(1000) // listener events post asynchronously
+        info(s"warm $kind: ${jobs.get()} Spark jobs")
+        assert(jobs.get() <= 4, s"warm $kind query ran ${jobs.get()} Spark jobs")
+      } finally spark.sparkContext.clearJobGroup()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("warm query path makes zero table-IO calls after the first query") {
     val root = java.nio.file.Files.createTempDirectory("graft_warmq").toString
     val io = new CountingIO(new ParquetTableIO(root))

@@ -230,6 +230,133 @@ class RetrievalSuite extends AnyFunSuite {
     assert(ctx.head.getAs[Boolean]("is_match"))
   }
 
+  // ---- driver-side merges vs straight-line specs (KgOracle style) ----
+
+  private def utf8Order(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Spark's `ORDER BY score DESC, chunkId`: string ties by UTF-8 bytes. */
+  private def ranksBefore(a: (String, Double), b: (String, Double)): Boolean =
+    if (a._2 != b._2) a._2 > b._2 else utf8Order(a._1, b._1) < 0
+
+  private def specMinMax(rs: Seq[(String, Double)]): Map[String, Double] =
+    if (rs.isEmpty) Map.empty
+    else {
+      val mn = rs.map(_._2).min; val mx = rs.map(_._2).max
+      rs.map { case (c, s) => c -> (if (mx == mn) 1.0 else (s - mn) / (mx - mn)) }.toMap
+    }
+
+  /** Hybrid spec: each side's top-k distinct chunks, ids without a chunk
+    * row dropped, min-max (all-equal → 1.0), w·vec + (1-w)·graph with a
+    * missing side as 0.0, top-k by (score desc, chunkId). */
+  private def specHybrid(v: Seq[(String, Double)], g: Seq[(String, Double)],
+      chunks: Seq[Chunk], topK: Int, w: Double = 0.5): Seq[(String, Double, String)] = {
+    val text = chunks.map(c => c.chunkId -> c.text).toMap
+    def side(s: Seq[(String, Double)]) = specMinMax(
+      s.sortWith(ranksBefore).distinctBy(_._1).take(topK).filter(x => text.contains(x._1)))
+    val (vn, gn) = (side(v), side(g))
+    (vn.keySet ++ gn.keySet).toSeq
+      .map(id => (id, vn.getOrElse(id, 0.0) * w + gn.getOrElse(id, 0.0) * (1.0 - w)))
+      .sortWith(ranksBefore).take(topK)
+      .map { case (id, sc) => (id, sc, text(id)) }
+  }
+
+  /** Context spec: ±n chunks of each hit's doc, a chunk reachable from
+    * several hits keeps its best score (the match row on a tie), ordered
+    * (score desc, docId, index); hits without a chunk row dropped. */
+  private def specContext(hits: Seq[(String, Double)], chunks: Seq[Chunk], n: Int)
+      : Seq[(String, String, Int, String, Double, Boolean)] = {
+    val byId = chunks.map(c => c.chunkId -> c).toMap
+    hits.filter(h => byId.contains(h._1)).flatMap { case (hitId, score) =>
+      val h = byId(hitId)
+      chunks.filter(c => c.docId == h.docId && math.abs(c.index - h.index) <= n).map { c =>
+        val m = c.chunkId == hitId
+        (c.chunkId, c.text, c.index, c.docId, if (m) score else 0.0, m)
+      }
+    }.groupBy(_._1).values.map(_.maxBy(r => (r._5, r._6))).toSeq
+      .sortWith { (a, b) =>
+        if (a._5 != b._5) a._5 > b._5
+        else if (a._4 != b._4) utf8Order(a._4, b._4) < 0
+        else a._3 < b._3
+      }
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Seq[(String, Double)] =
+    df.select("chunkId", "score").collect().toSeq.map(r => (r.getString(0), r.getDouble(1)))
+  private def hybridRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Double, String)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getDouble(1), r.getString(2)))
+  private def contextRows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+    (r.getString(0), r.getString(1), r.getInt(2), r.getString(3), r.getDouble(4), r.getBoolean(5)))
+
+  test("hybrid search equals the straight-line spec over the fixture's sides " +
+      "(stopword-only query included)") {
+    val terms = result.terms.toDF()
+    val chunks = result.chunks.collect().toSeq
+    for (q <- Seq("the is of", gen.truth.head._1, gen.truth.last._3 + " " + gen.truth.head._1)) {
+      val v = pairs(retrieval.vectorScores(result.chunkEmbeddings, q))
+      val g = pairs(retrieval.termScores(terms, result.chunks, q))
+      if (q == "the is of") assert(g.isEmpty, "stopword-only query has an empty term side")
+      val got = hybridRows(retrieval.hybridSearch(terms, result.chunks, result.chunkEmbeddings, q))
+      assert(got.nonEmpty)
+      assert(got == specHybrid(v, g, chunks, 10), s"query '$q'")
+    }
+  }
+
+  test("hybrid merge on hand-built sides: all-equal side, shared chunk, " +
+      "top-K boundary tie on UTF-8 order, orphan id") {
+    val s = spark; import s.implicits._
+    // U+FF61 is EF BD A1 in UTF-8, U+1F600 is F0 9F 98 80: the byte order
+    // puts U+FF61 first, Java's UTF-16 compareTo puts U+1F600 first
+    val (half, emoji) = ("\uFF61", "\uD83D\uDE00")
+    val ids = Seq("a", "b", "c", "d", "e", "q", "z", half, emoji)
+    val chunkSeq = ids.zipWithIndex.map { case (id, i) => Chunk("doc", id, i, s"text of $id", 3) }
+    val chunks = spark.createDataset(chunkSeq)
+    val noEmb = spark.emptyDataset[ChunkEmbedding]
+    val cases = Seq(
+      // term side all equal → every graph score normalizes to 1.0
+      ("all-equal side", Seq("a" -> 0.9, "b" -> 0.5, "c" -> 0.1),
+        Seq("d" -> 3.0, "e" -> 3.0), 3, Seq("a", "d", "e")),
+      // b on both sides: 0.5·0.5 + 1.0·0.5 = 0.75 leads
+      ("shared chunk", Seq("a" -> 0.9, "b" -> 0.5, "c" -> 0.1),
+        Seq("b" -> 4.0, "c" -> 2.0, "d" -> 1.0), 3, Seq("b", "a", "c")),
+      // U+FF61 and U+1F600 tie at 0.25 for the third slot
+      ("boundary tie", Seq("a" -> 1.0, half -> 0.5, "z" -> 0.0),
+        Seq("b" -> 4.0, emoji -> 2.0, "q" -> 0.0), 3, Seq("a", "b", half)),
+      // ghost has no chunk row: it drops out of both sides
+      ("orphan id", Seq("ghost" -> 0.9, "a" -> 0.5, "b" -> 0.1),
+        Seq("ghost" -> 5.0, "c" -> 1.0), 3, Seq("a", "c", "b")))
+    for ((name, v, g, k, wantIds) <- cases) {
+      val got = hybridRows(retrieval.hybridSearch(spark.emptyDataFrame, chunks, noEmb, "unused",
+        topK = k, termHits = Some(g.toDF("chunkId", "score")),
+        vectorHits = Some(v.toDF("chunkId", "score"))))
+      assert(got == specHybrid(v, g, chunkSeq, k), name)
+      assert(got.map(_._1) == wantIds, name)
+    }
+  }
+
+  test("context expansion equals the straight-line spec: overlapping " +
+      "windows keep the best score, orphan hits drop") {
+    val s = spark; import s.implicits._
+    val chunkSeq = (0 to 6).map(i => Chunk("d1", s"d1_$i", i, s"one $i", 2)) ++
+      (0 to 2).map(i => Chunk("d2", s"d2_$i", i, s"two $i", 2))
+    val chunks = spark.createDataset(chunkSeq)
+    // d1_2's and d1_4's windows overlap on d1_2..d1_4: d1_2 is context
+    // (0.0) of d1_4 and a match (2.0) of itself — the match wins
+    val hits = Seq("d1_2" -> 2.0, "d1_4" -> 3.0, "ghost" -> 9.0, "d2_0" -> 1.0)
+    val got = contextRows(retrieval.withContext(hits.toDF("chunkId", "score"), chunks, 2))
+    assert(got == specContext(hits, chunkSeq, 2))
+    assert(got.take(3).map(r => (r._1, r._5, r._6)) ==
+      Seq(("d1_4", 3.0, true), ("d1_2", 2.0, true), ("d2_0", 1.0, true)))
+    assert(got.map(_._1).toSet == chunkSeq.map(_.chunkId).toSet, "every chunk in a window")
+
+    // and over the fixture's own term side
+    val q = gen.truth.head._1
+    val g = retrieval.termScores(result.terms.toDF(), result.chunks, q)
+    assert(contextRows(retrieval.withContext(g, result.chunks, 2)) ==
+      specContext(pairs(g), result.chunks.collect().toSeq, 2))
+  }
+
   test("relationship search finds edges for a capitalized query entity") {
     // single-token subject (the P7 regex only captures one-word runs of
     // a capitalized word per phrase)

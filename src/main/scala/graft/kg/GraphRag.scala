@@ -27,7 +27,9 @@ final class GraphRag(
   /** Query-side retrieval bound to the STORE's persisted bucket count
     * (`num_buckets` layout metadata): partition pruning must compute
     * bucket ids with the count the writer laid down, not the engine
-    * default. Resolved lazily and cached per facade instance;
+    * default. Resolved lazily, behind the store-format gate
+    * ([[Pipeline.checkFormat]]: an older engine's store is refused here),
+    * and cached per facade instance;
     * [[ingest]]/[[reset]] invalidate it. The cached pair records WHETHER
     * the count came from the stamped metadata: once stamped, the count
     * is immutable for the life of the store (only [[reset]] clears it,
@@ -45,6 +47,7 @@ final class GraphRag(
       val stamped = io.getMeta(spark, "num_buckets").isDefined
       if (c != null && !stamped) c._2 // still unstamped: fallback holds
       else {
+        Pipeline.checkFormat(spark, io)
         val nb = Pipeline.resolveNumBuckets(spark, io, config)
         val r = new Retrieval(embedder, config.copy(numBuckets = nb))
         retrievalCache = (stamped, r)
@@ -161,10 +164,9 @@ final class GraphRag(
     * `chunk_vec_meta` sidecar — 32 rows). FROZEN once an index exists,
     * so caching per facade instance is safe; [[ingest]]/[[reset]] drop
     * the cache in case they created or truncated the sidecar. None =
-    * the store has no sidecar — an index without one was written by a
-    * legacy engine under an UNKNOWABLE geometry, so it is never probed
-    * (queries fall back to the exact scan until the next ingest's
-    * geometry-upgrade migration rebuilds it; see Pipeline.materialize). */
+    * no thresholds (no index yet, a reset store, or a batch that crashed
+    * before the sidecar write): the index is not probed, and queries
+    * fall back to the exact scan until the next ingest rebuilds it. */
   @volatile private var annThresholdsCache: Option[Array[Double]] = null
   private def annThresholds: Option[Array[Double]] = {
     val cached = annThresholdsCache
@@ -195,8 +197,8 @@ final class GraphRag(
     *   baseline) or "ann" — the LSH-bucketed `chunk_vec_index` layout
     *   ([[Retrieval.vectorSearchAnn]]): partition-pruned candidate lookup
     *   + exact re-score, the scale path mirroring the reference's own
-    *   approximate Qdrant HNSW search. Falls back to exact on stores
-    *   written before the index existed. */
+    *   approximate Qdrant HNSW search. Falls back to exact while the
+    *   store has no index thresholds (see [[annThresholds]]). */
   def query(
       q: String,
       topK: Int = config.topK,
@@ -216,13 +218,7 @@ final class GraphRag(
       else {
         val vectorHits =
           if (vectorMode == "ann" && tableExists("chunk_vec_index") &&
-              // a MISSING sidecar (legacy index, geometry unknowable) or one
-              // from a DIFFERENT index geometry (plane-count mismatch) means
-              // the store predates the current layout — fall back to the
-              // exact scan until an ingest/rebuild migrates the index
-              // (Pipeline's geometry-upgrade path)
-              annThresholds.exists(
-                _.length == graft.kg.retrieve.VectorIndex.NumPlanes))
+              annThresholds.isDefined)
             Some(retrieval.vectorScoresAnn(
               table("chunk_vec_index"), q, topK, thresholds = annThresholds.get))
           else None
@@ -237,7 +233,8 @@ final class GraphRag(
       // of a merged entity returns the merged component's edges (the
       // reference's alias cross-product reachability,
       // triplets.py:371-398 / retrieval.py:265-314). Base-edge
-      // fallbacks serve stores written before each index existed.
+      // fallbacks serve exact-mode stores (no canonical tables) and a
+      // crashed first batch that left edges without their index.
       if (tableExists("canonical_edge_entity_index"))
         retrieval.relationshipSearchCanonical(
           table("canonical_edge_entity_index"), canonicalMapOrEmpty(),
@@ -251,7 +248,7 @@ final class GraphRag(
   }
 
   /** The store's canonical map (non-identity rows), or a typed empty
-    * frame on stores that predate the table — the canonical relationship
+    * frame on a store without the table — the canonical relationship
     * lookup then degrades gracefully to identity canonicalization. */
   private def canonicalMapOrEmpty(): DataFrame = {
     import spark.implicits._
@@ -323,11 +320,11 @@ final class GraphRag(
         io.overwrite(spark, t, empty)
       }
     }
-    // a reset store is a FRESH store: layout constants and convention
-    // stamps go with the data, so the next ingest re-adopts the config
-    // knob (a surviving num_buckets would silently pin the old layout)
+    // a reset store takes the next ingest's bucket-count knob (a
+    // surviving num_buckets would silently pin the old layout). The
+    // format_version stamp stays: the emptied tables keep this engine's
+    // schemas.
     io.clearMeta(spark, "num_buckets")
-    io.clearFlag(spark, "band_index_v2")
     io.clearFlag(spark, "batch_inflight")
     retrievalCache = null
   }

@@ -91,14 +91,13 @@ trait GraphTableIO extends Serializable {
 
   /** Tiny durable layout metadata (key → value) — the Iceberg
     * table-properties analogue: records layout constants every reader
-    * and writer of the store must agree on (e.g. `num_buckets`, the
-    * partition-bucket count of the hash-bucketed tables). Metadata-only
-    * — reading it must not schedule a job. Defaults: absent/no-op — a
-    * backend without durable metadata leaves resolution to the engine
-    * defaults. */
-  def putMeta(spark: SparkSession, name: String, value: String): Unit = ()
-  def getMeta(spark: SparkSession, name: String): Option[String] = None
-  def clearMeta(spark: SparkSession, name: String): Unit = ()
+    * and writer of the store must agree on (`format_version`, the store
+    * format stamp; `num_buckets`, the partition-bucket count of the
+    * hash-bucketed tables). Metadata-only — reading it must not schedule
+    * a job. */
+  def putMeta(spark: SparkSession, name: String, value: String): Unit
+  def getMeta(spark: SparkSession, name: String): Option[String]
+  def clearMeta(spark: SparkSession, name: String): Unit
 }
 
 /** Parquet-backed sandbox impl rooted at `root`. A production impl would
@@ -329,10 +328,10 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     try out.write(value.getBytes("UTF-8")) finally out.close()
     // ATOMIC replace — a delete→rename pair has a window where the meta
     // file is ABSENT, and a reader resolving num_buckets in that window
-    // on a populated store would fall back to the wrong bucket count and
-    // prune with wrong bucket ids. Local scheme: nio ATOMIC_MOVE (rename
-    // over the destination); other schemes: FileContext rename with
-    // Options.Rename.OVERWRITE (a single metadata op on HDFS).
+    // would fall back to the config knob and prune with wrong bucket
+    // ids. Local scheme: nio ATOMIC_MOVE (rename over the destination);
+    // other schemes: FileContext rename with Options.Rename.OVERWRITE (a
+    // single metadata op on HDFS).
     val dst = metaPath(name)
     val scheme = rootP.toUri.getScheme
     if (scheme == null || scheme == "file")
@@ -582,9 +581,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * PREFIX of the expected columns (e.g. `l` alone vs (`l`, `vbucket`))
     * would otherwise pass the guard and the physical append would mix
     * two directory nestings in one table. Gate for the physical fast
-    * paths: a layout written by a different engine version falls back to
-    * the full-rewrite MERGE, which re-lays the table under the current
-    * layout (and null-fills evolved columns). */
+    * paths: the flat empty tables `GraphRag.reset` leaves fall back to
+    * the full-rewrite MERGE, which re-lays the table under its
+    * partition layout. */
   /** Per-(table, layout) validation memo: the deep walk below costs one
     * listStatus per directory (1k+ calls on the vector index), and under
     * the single-writer contract a layout this instance validated — or
@@ -621,15 +620,10 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
 
   def merge(spark: SparkSession, table: String, delta: DataFrame,
       keys: Seq[String], partitionCols: Seq[String] = Nil): Unit = {
-    // allowMissingColumns = true is the schema-evolution path: a column
-    // added to the delta in a later engine version (e.g. the terms table
-    // gaining `tf`) null-fills the pre-existing rows instead of crashing
-    // ingest into a store created by an older version — matching Iceberg
-    // MERGE INTO behavior after an ADD COLUMN.
     // Key collisions resolve DETERMINISTICALLY in the delta's favor
     // (WHEN MATCHED THEN UPDATE): existing rows whose key reappears in the
-    // delta are anti-joined away, so a re-ingest repairs e.g. a null-tf
-    // row from an older store instead of arbitrarily keeping either side.
+    // delta are anti-joined away instead of arbitrarily keeping either
+    // side.
     // the delta's plan is consumed TWICE on the upsert path (the anti-join
     // key side and the union side) and Spark does not dedupe two distinct
     // projections of one subtree — pin it for the duration of the write
@@ -647,9 +641,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       // I/O is O(touched buckets' content), not O(table). Production:
       // Iceberg MERGE INTO on a bucket-partitioned table does exactly
       // this partition-level rewrite. Requires same column set and the
-      // current physical layout (no legacy flat/default-partition rows
-      // whose keys could collide from untouched partitions) — else the
-      // full rewrite below re-lays and repairs the whole table.
+      // partitioned physical layout (a reset table is flat) — else the
+      // full rewrite below re-lays the whole table.
       val bucketSelective = partitionCols.length == 1 &&
         read(spark, table).schema.fieldNames.toSet ==
           d.schema.fieldNames.toSet &&
@@ -671,7 +664,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       }
       val merged = read(spark, table)
         .join(d.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        .unionByName(d, allowMissingColumns = true)
+        .unionByName(d)
         .dropDuplicates(keys)
       writeSwap(spark, table, merged, partitionCols)
     } finally if (!pinned) { d.unpersist(blocking = false); () }
@@ -695,12 +688,12 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // 16-batch series — the pipeline pins the expensive upstreams
     // (chunks, triples) itself, so the probe's recompute is a cheap
     // projection over those caches.
-    // layout/column-set guard: appending current-engine files into a
-    // table laid down by an older engine version (different partition
-    // tree, missing columns) would mix incompatible files in one
+    // layout/column-set guard: appending partitioned files into a table
+    // laid down flat (the empty tables GraphRag.reset leaves) or under
+    // another partition tree would mix incompatible files in one
     // directory — fall back to the full MERGE rewrite, which re-lays the
-    // whole table under the current layout and null-fills evolved
-    // columns (one-time migration cost; later batches append again)
+    // whole table under `partitionCols` (one-time cost; later batches
+    // append again)
     val compatible =
       read(spark, table).schema.fieldNames.toSet == d.schema.fieldNames.toSet &&
         layoutMatches(spark, table, partitionCols)

@@ -62,42 +62,50 @@ object Pipeline {
       numBuckets: Int = NumBuckets): org.apache.spark.sql.DataFrame =
     map.withColumn("cbucket", pmod(hash(col("name")), lit(numBuckets)))
 
+  /** Store layout version of this engine, stamped as `format_version`
+    * metadata by a fresh store's first materialize (the Iceberg
+    * `format-version` table property). */
+  val FormatVersion = "1"
+
+  /** The store-format gate of materialize and of the facade's
+    * bucket-count resolution: true for a store with the current stamp,
+    * false for a fresh one (no stamp and none of the tables a crashed
+    * first batch can leave), an error for anything else — an older
+    * engine's store is refused, never migrated. */
+  def checkFormat(spark: SparkSession, io: GraphTableIO): Boolean =
+    io.getMeta(spark, "format_version").map(_.trim) match {
+      case Some(FormatVersion) => true
+      case None if !Seq("chunks", "terms", "edges", "vertices",
+          "chunk_embeddings").exists(io.exists(spark, _)) => false
+      case found => throw new IllegalStateException(
+        s"store format_version ${found.getOrElse("(unstamped)")} is not " +
+          s"this engine's $FormatVersion: the store was written by an " +
+          "older engine and is neither read nor migrated. Ingest the " +
+          "corpus into a new root.")
+    }
+
   /** The store's authoritative bucket count: its persisted `num_buckets`
-    * layout metadata when present; a store that pre-exists WITHOUT the
-    * metadata was written by a pre-knob engine at the historical
-    * [[NumBuckets]] (checked against EVERY table a crashed first batch
-    * could have left, not just `edges` — a store whose only table is
-    * `chunks` was still laid down at 32); only a genuinely fresh store
-    * adopts the config knob. The store always wins over the knob —
-    * readers and writers resolving from one durable source is what
-    * makes mixing two bucket counts in one store impossible. A backend
-    * whose metadata is a no-op (default `putMeta`) resolves to the
-    * engine default ALWAYS — the knob silently varying per batch on
-    * such a backend would mix layouts; materialize detects the no-op by
-    * re-reading after the stamp and pins [[NumBuckets]]. */
-  def resolveNumBuckets(spark: org.apache.spark.sql.SparkSession,
-      io: GraphTableIO, config: GraftConfig): Int =
-    io.getMeta(spark, "num_buckets").map { v =>
-      // fail LOUDLY on a corrupt stamp — a silent fallback would resolve
-      // a different count than the writer used and mix bucket layouts
-      try v.trim.toInt
-      catch { case e: NumberFormatException =>
-        throw new IllegalStateException(
-          s"corrupt num_buckets layout metadata ('${v.trim}') — refusing " +
-            "to guess a bucket count: a wrong fallback would prune with " +
-            "bucket ids the store was not written under. Restore or " +
-            "remove the _meta_num_buckets sidecar to recover.", e)
-      }
-    }.getOrElse(
-      // rowCount distinguishes a pre-knob store (rows laid down at 32)
-      // from a RESET one (tables exist but empty — any count is
-      // consistent with zero rows, so the knob may apply). Metadata-only
-      // (footers) and paid only while the meta is absent: the first
-      // materialize stamps it and this branch never runs again.
-      if (Seq("chunks", "terms", "edges", "vertices", "chunk_embeddings")
-            .exists(t => io.exists(spark, t) && io.rowCount(spark, t) > 0))
-        NumBuckets
-      else config.numBuckets)
+    * layout metadata when present, else the config knob (a fresh or
+    * reset store; materialize stamps the knob's value before its first
+    * bucketed write). The store always wins over the knob — readers and
+    * writers resolving from one durable source is what makes mixing two
+    * bucket counts in one store impossible. */
+  def resolveNumBuckets(spark: SparkSession, io: GraphTableIO,
+      config: GraftConfig): Int =
+    io.getMeta(spark, "num_buckets").map(parseNumBuckets)
+      .getOrElse(config.numBuckets)
+
+  // fail LOUDLY on a corrupt stamp — a silent fallback would resolve a
+  // different count than the writer used and mix bucket layouts
+  private def parseNumBuckets(v: String): Int =
+    try v.trim.toInt
+    catch { case e: NumberFormatException =>
+      throw new IllegalStateException(
+        s"corrupt num_buckets layout metadata ('${v.trim}') — refusing " +
+          "to guess a bucket count: a wrong fallback would prune with " +
+          "bucket ids the store was not written under. Restore or " +
+          "remove the _meta_num_buckets sidecar to recover.", e)
+    }
 }
 
 final class Pipeline(
@@ -232,24 +240,23 @@ final class Pipeline(
                 maxBucket = config.lshMaxBucket,
                 broadcastSmall = !config.saltedCanonicalJoin).toDF()
             case _ =>
-              // fresh store, or a legacy store with no stored index yet
-              // (materialize backfills it this batch): one full-universe
-              // self-join
+              // fresh store, or the first lsh batch over an exact-mode
+              // store (no band index yet; materialize signs its vertex
+              // names this batch): one full-universe self-join
               Link.lshAliases(linkUniverse, config.linkThreshold,
                 config.linkTopK, maxBucket = config.lshMaxBucket).toDF()
           }
         }.as[AliasPair]
       case _ => Link.exactAliases(spark) // stock reference behavior
     }
-    // the LEGACY link path (incremental store predating the band index)
-    // scans the LIVE vertices file listing lazily, and the later
-    // bucket-selective vertices merge DELETES those listed files; a
-    // persist is not durable enough (block loss → silent recompute over
-    // the stale listing → FileNotFoundException mid-materialize). Cut
-    // the lineage eagerly before any table swap. Checkpoint-enabled runs
-    // already re-read the stage's own parquet (no live dependency);
-    // the band-index path reads only append-only tables (listings stay
-    // valid by construction) — neither needs this.
+    // the full-universe link over an existing store (the first lsh batch
+    // over an exact-mode store, which has no band index) scans the LIVE
+    // vertices listing lazily, and the later bucket-selective vertices
+    // merge DELETES those files; a persist is not durable enough (block
+    // loss → recompute over the stale listing → FileNotFoundException
+    // mid-materialize), so cut the lineage eagerly before any table swap.
+    // Checkpoint-enabled runs re-read the stage's own parquet, and the
+    // band-index path reads only append-only tables — neither needs this.
     val aliases: Dataset[AliasPair] =
       if (existingVertices.isDefined && existingBandIndex.isEmpty &&
           config.checkpointDir.isEmpty)
@@ -295,19 +302,20 @@ final class Pipeline(
   private def materializeLocked(
       corpus: Dataset[CorpusRow], io: GraphTableIO): Map[String, Long] = {
     val spark = corpus.sparkSession
+    // format gate: refuse an older engine's store; stamp a fresh one
+    // before its first write (Pipeline.checkFormat)
+    if (!Pipeline.checkFormat(spark, io))
+      io.putMeta(spark, "format_version", Pipeline.FormatVersion)
     // crash detection (see the scaladoc): a marker left by a batch that
     // began but never completed forces one full canonical rebuild now
     val priorIncomplete = io.flagSet(spark, "batch_inflight")
     io.setFlag(spark, "batch_inflight")
-    // incremental gating + legacy-path link universe. NO snapshot of
-    // the vertex table is taken on the band-index path: it never reads
-    // vertex rows — linking probes the stored band index and embeds
-    // candidates inline — so per-batch vertices I/O is zero, not
-    // O(store). The legacy full-join path (store predating the band
-    // index) DOES scan this frame; run() eagerly cuts its lineage
-    // (aliases localCheckpoint) before any table swap, because the
-    // bucket-selective vertices merge deletes the files this listing
-    // names — a lazy recompute after the swap would FileNotFound.
+    // incremental gating + full-universe link input. The band-index
+    // path never reads vertex rows (linking probes the stored index and
+    // embeds candidates inline), so per-batch vertices I/O is zero. The
+    // full-join path (the first lsh batch over an exact-mode store, which
+    // has no band index) scans this frame, and run() cuts its lineage
+    // before any table swap (see the aliases localCheckpoint there).
     // captured BEFORE this batch's merges: "store pre-existed" signals
     // for the band-index reconcile below (after the vertices merge,
     // io.exists(vertices) is true even for a genuinely fresh store)
@@ -321,17 +329,9 @@ final class Pipeline(
     // eagerly (localCheckpoint in lshAliasesIncremental) — so even the
     // sliver compaction that may replace sub-bound index files at this
     // batch's own append can't invalidate a lazy plan later.
-    // Shingle-convention versioning: an index signed under a pre-v2
-    // convention (no `band_index_v2` flag) must NOT be probed with v2
-    // batch signatures — the md5 band minhashes differ for every name,
-    // so every probe would miss. Treat it as absent this batch (one
-    // legacy full-universe link) and rebuild it wholesale below.
     val bandIndexStored = io.exists(spark, "lsh_band_index")
-    val bandIndexPreV2 = bandIndexStored && !io.flagSet(spark, "band_index_v2")
-    val bandIndex =
-      if (existing.isDefined && bandIndexStored && !bandIndexPreV2)
-        Some(io.read(spark, "lsh_band_index"))
-      else None
+    val bandIndex = Option.when(existing.isDefined && bandIndexStored)(
+      io.read(spark, "lsh_band_index"))
     // prior-state identity for the resume fingerprint, from storage
     // metadata (Iceberg snapshot id analogue) — never from table rows
     val storeFp = {
@@ -341,21 +341,14 @@ final class Pipeline(
     }
     val r = run(corpus, existing, bandIndex, storeFp)
     // authoritative bucket count for every bucketed write below: the
-    // store's durable `num_buckets` metadata (stamped now, under the
-    // writer lease, if absent) — never the raw config knob on an
-    // existing store (Pipeline.resolveNumBuckets). If the backend's
-    // metadata is a no-op (stamp doesn't read back), pin the engine
-    // default: a knob that silently varied per batch would mix bucket
-    // counts in one store with wrong query pruning.
-    val nb = {
-      val resolved = Pipeline.resolveNumBuckets(spark, io, config)
-      if (io.getMeta(spark, "num_buckets").isDefined) resolved
-      else {
-        io.putMeta(spark, "num_buckets", resolved.toString)
-        if (io.getMeta(spark, "num_buckets").isDefined) resolved
-        else Pipeline.NumBuckets
+    // store's durable `num_buckets` metadata — never the raw config knob
+    // on an existing store (Pipeline.resolveNumBuckets). A fresh or reset
+    // store adopts the knob and records it now, under the writer lease.
+    val nb = io.getMeta(spark, "num_buckets").map(Pipeline.parseNumBuckets)
+      .getOrElse {
+        io.putMeta(spark, "num_buckets", config.numBuckets.toString)
+        config.numBuckets
       }
-    }
     // the merges below consume chunks through three branches (chunks,
     // embeddings, terms) and triples through four more (edges, entity
     // index, canonical edges, vertices) — pin both for the duration of
@@ -395,12 +388,9 @@ final class Pipeline(
     // vertices by name hash — partition-parallel MERGE and pruning;
     // production = Iceberg bucket(N, col) transforms. The subject is the
     // one diverse axis an edge has: predicates come from a closed
-    // relation lexicon (~10 distinct values), so a pred-hash layout
-    // (rounds 4-6) concentrated the whole table into ~|lexicon| dirs and
-    // EVERY batch touched every one of them — the round-7 BatchReadProbe
-    // measured the bucket-selective merge rewriting the full edges table
-    // (3.25 of 3.27 MB) and delta compaction rebuilding the full
-    // canonical pair (12.3 of 12.3 MB) on a 40-doc batch. Subject-hash
+    // relation lexicon (~10 values), so a pred-hash layout put the table
+    // into ~|lexicon| dirs that every batch rewrote (measured: the full
+    // edges table and canonical pair on a 40-doc batch). Subject-hash
     // buckets spread with the entity universe, so touched buckets scale
     // with the batch.
     val edgesPart = r.edges.toDF()
@@ -418,35 +408,26 @@ final class Pipeline(
     // reference's Neo4j `MERGE ... ON CREATE SET`. A config change that
     // redefines the key→row function (chunk size, stopwords) requires a
     // reset, exactly as it does for the reference. appendNew falls back
-    // to the schema-evolving full MERGE on stores whose layout or column
-    // set predates the current engine.
+    // to the full MERGE on the flat empty tables reset() leaves.
     io.appendNew(spark, "chunks", r.chunks.toDF(), Seq("chunkId"))
     io.appendNew(spark, "chunk_embeddings", r.chunkEmbeddings.toDF(), Seq("chunkId"))
     // ANN scale path for O1 vector search: LSH sign-sketch layout of the
     // chunk embeddings under l=<table>/vbucket=<bucket> partition dirs
     // (Retrieval.vectorSearchAnn prunes to the query's probe buckets
     // instead of scanning every vector; see retrieve/VectorIndex.scala).
-    // Per-plane MEDIAN thresholds balance bucket occupancy (hot-bucket
-    // row amplification otherwise defeats the pruning — VectorIndex doc);
-    // computed on the FIRST index build, persisted in the chunk_vec_meta
-    // sidecar, and FROZEN for later incremental merges — re-thresholding
-    // would invalidate the partitions already laid down (an index REBUILD
-    // recomputes them).
+    // Per-plane MEDIAN thresholds balance bucket occupancy; they are
+    // computed by an index build, persisted in the chunk_vec_meta sidecar
+    // and FROZEN for later appends — re-thresholding would invalidate the
+    // partitions already laid down.
     import graft.kg.retrieve.VectorIndex
-    def writeVecMeta(t: Array[Double]): Unit =
-      io.overwrite(spark, "chunk_vec_meta",
-        spark.createDataFrame(t.zipWithIndex.map { case (th, i) => (i, th) }.toSeq)
-          .toDF("pid", "threshold"))
-    val storedVecMeta: Option[Array[Double]] =
-      VectorIndex.readThresholds(spark, io)
-    // GEOMETRY UPGRADE / legacy migration: rebuild the index wholesale
-    // from the cumulative embeddings table (already merged above), under
-    // fresh medians. Order matters for crash safety: the INDEX swaps
-    // first, the sidecar last — a crash in between leaves {new index, no
-    // or stale sidecar}, which the detectors below treat as another
-    // upgrade (idempotent rebuild); sidecar-first would leave a
-    // matching-length sidecar over an old-geometry index, silently
-    // defeating the detector.
+    // wholesale (re)build from the cumulative embeddings table (already
+    // merged above) under fresh medians — on a fresh store that table
+    // equals the batch, and reading it avoids re-running the in-flight
+    // embed pipeline once for the medians and once per layout table (r8:
+    // 5 recomputed embed passes of the 250k-doc batch eliminated). The
+    // INDEX swaps first and the sidecar last: a crash in between leaves
+    // an index laid under other thresholds than the sidecar's, which the
+    // next batch (batch_inflight still set) rebuilds, never appends to.
     def rebuildIndexWholesale(): Unit = {
       val t = VectorIndex.computeThresholds(
         io.read(spark, "chunk_embeddings"), embedder.dim)
@@ -454,52 +435,24 @@ final class Pipeline(
         VectorIndex.layout(io.read(spark, "chunk_embeddings"),
           embedder.dim, t),
         Seq("l", "vbucket"))
-      writeVecMeta(t)
+      io.overwrite(spark, "chunk_vec_meta",
+        spark.createDataFrame(t.zipWithIndex.map { case (th, i) => (i, th) }.toSeq)
+          .toDF("pid", "threshold"))
     }
-    storedVecMeta match {
-      case Some(t) if t.length == VectorIndex.NumPlanes =>
-        // staleness probe before committing to the frozen geometry: a
-        // statistically meaningful batch whose projections land
-        // lopsidedly against the frozen median cuts signals a shifted
-        // embedding distribution — occupancy would re-skew and silently
-        // erode the row-pruning win, so the index rebuilds wholesale
-        // under fresh cumulative medians instead (policy constants and
-        // rationale: VectorIndex.StaleSkewBound)
-        val skew = VectorIndex.occupancySkew(
-          r.chunkEmbeddings.toDF(), embedder.dim, t)
-        if (skew.exists(_ > VectorIndex.StaleSkewBound)) rebuildIndexWholesale()
-        else
-          // steady state: APPEND the batch under the frozen thresholds
-          // (bucket is a pure function of the key while they are frozen —
-          // the largest table of the store never rewrites on ingest)
-          io.appendNew(spark, "chunk_vec_index",
-            VectorIndex.layout(r.chunkEmbeddings.toDF(), embedder.dim, t),
-            Seq("chunkId", "l"), Seq("l", "vbucket"))
-      case Some(_) =>
-        // the stored sidecar was written under a different (L·K) layout —
-        // merging new rows bucketed under the current geometry into the
-        // old directories would corrupt the index
-        rebuildIndexWholesale()
-      case None if io.exists(spark, "chunk_vec_index") =>
-        // a PRE-EXISTING index with NO sidecar: laid down by a legacy
-        // engine whose geometry is UNKNOWABLE from the dirs alone (the
-        // raw-sign era used a different K and plane numbering) — pinning
-        // zero thresholds here would mix two incompatible layouts in one
-        // table and silently lose recall on every pre-upgrade row,
-        // permanently. Treat it exactly like the sidecar-mismatch case.
-        // (GraphRag queries fall back to the exact scan until this
-        // migration runs — an index without a sidecar is never probed.)
-        rebuildIndexWholesale()
-      case None =>
-        // genuinely fresh store: the cumulative embeddings table was
-        // merged just above and equals the batch, so the wholesale
-        // rebuild (thresholds + layout FROM THE STORED TABLE) produces
-        // the identical index — and reads cheap parquet scans instead of
-        // re-running the in-flight embed pipeline once for the medians
-        // and once per layout table (r8, guide §1/§2.3: 5 recomputed
-        // embed passes of the 250k-doc batch eliminated; IngestProbe
-        // attribution in OPTIMIZATION_r08.md)
-        rebuildIndexWholesale()
+    VectorIndex.readThresholds(spark, io) match {
+      // steady state: APPEND the batch under the frozen thresholds (the
+      // bucket is a pure function of the key while they are frozen), unless
+      // the staleness probe sees a shifted embedding distribution that
+      // would re-skew occupancy (VectorIndex.StaleSkewBound)
+      case Some(t) if !priorIncomplete &&
+          !VectorIndex.occupancySkew(r.chunkEmbeddings.toDF(), embedder.dim, t)
+            .exists(_ > VectorIndex.StaleSkewBound) =>
+        io.appendNew(spark, "chunk_vec_index",
+          VectorIndex.layout(r.chunkEmbeddings.toDF(), embedder.dim, t),
+          Seq("chunkId", "l"), Seq("l", "vbucket"))
+      // no sidecar (fresh or reset store), a skewed batch, or a crashed
+      // predecessor
+      case _ => rebuildIndexWholesale()
     }
     // terms dedup on the MERGE key but KEEP the in-flight multiplicity as
     // a tf column — termSearch's documented score is TF summed per chunk,
@@ -519,18 +472,6 @@ final class Pipeline(
       Terms.termsWithTf(r.chunks, config.removeStopwords)
         .withColumn("tbucket", pmod(hash(col("text")), lit(nb))),
       Seq("chunkId", "text", "termType"), Seq("tbucket"))
-    val edgesPreexisted = io.exists(spark, "edges")
-    // one-time layout migration: a store written under the pred-hash
-    // era carries pbucket dirs — re-lay it under sbucket once (merge's
-    // schema-evolution fallback would null-fill the new partition column
-    // instead, stranding old rows in a default partition)
-    if (edgesPreexisted &&
-        !io.read(spark, "edges").columns.contains("sbucket"))
-      io.overwrite(spark, "edges",
-        io.read(spark, "edges")
-          .select("subj", "pred", "obj", "label", "sourceChunkId")
-          .withColumn("sbucket", pmod(hash(col("subj")), lit(nb))),
-        Seq("sbucket"))
     io.merge(spark, "edges", edgesPart, Seq("subj", "pred", "obj"), Seq("sbucket"))
     // pred → subject-bucket registry: one row per DISTINCT (pred,
     // sbucket) pair ever stored — O(|pred lexicon| × touched buckets)
@@ -540,9 +481,9 @@ final class Pipeline(
     // the subj/obj entity index cannot prune a by-pred probe); without
     // it a changed name that occurs as a predicate would force a full
     // edge scan. pibucket partitions the registry by pred hash so the
-    // probe prunes to the changed names' buckets.
-    if ((edgesPreexisted && !io.exists(spark, "pred_index")) ||
-        priorIncomplete)
+    // probe prunes to the changed names' buckets. A crashed predecessor
+    // may have merged edges it never registered: rebuild wholesale.
+    if (priorIncomplete)
       io.overwrite(spark, "pred_index",
         io.read(spark, "edges").select(col("pred"), col("sbucket"))
           .distinct()
@@ -561,18 +502,14 @@ final class Pipeline(
     // object-side probe needs this index.
     // Edges are immutable keyed rows, so exploding only the DELTA keeps
     // the index complete under MERGE accumulation — valid only while
-    // every prior batch did the same. Two cases where the stored index
-    // cannot be trusted to cover the merged edge set, healed by one
-    // wholesale rebuild from the just-merged table (the band-index
-    // re-sign pattern above): a legacy store whose edges predate the
-    // index, and a predecessor that died between its edges merge and its
-    // index merge (batch_inflight still set — the retry contract re-runs
-    // the batch, but an operator that skips it instead must not leave
-    // invisible edges). The index's completeness is CANONICAL-state-
-    // bearing, not just query-bearing: delta compaction's affected-edge
-    // pass reads it instead of scanning every base edge.
-    if ((edgesPreexisted && !io.exists(spark, "edge_entity_index")) ||
-        priorIncomplete)
+    // every prior batch did the same. A predecessor that died between
+    // its edges merge and its index merge (batch_inflight still set — the
+    // retry contract re-runs the batch, but an operator that skips it
+    // instead must not leave invisible edges) is healed by one wholesale
+    // rebuild from the just-merged table. The index's completeness is
+    // CANONICAL-state-bearing, not just query-bearing: delta compaction's
+    // affected-edge pass reads it instead of scanning every base edge.
+    if (priorIncomplete)
       io.overwrite(spark, "edge_entity_index",
         Pipeline.entityIndexRows(io.read(spark, "edges"), nb),
         Seq("ebucket"))
@@ -627,10 +564,11 @@ final class Pipeline(
     // band-index maintenance: signatures are pure functions of the name,
     // so the table is APPEND-ONLY — new names' rows are physically
     // appended (O(batch) write, no table rewrite; GraphTableIO.appendNew).
-    // A legacy store (pre-index) gets a one-time backfill of the prior
-    // vertex names, after which every later batch probes instead of
-    // re-signing the universe. An EXACT batch over a store that HAS the
-    // index must maintain it too: its names enter the cumulative mention
+    // The first lsh batch over an exact-mode store (which has no index)
+    // signs the prior vertex names once, after which every later batch
+    // probes instead of re-signing the universe. An EXACT batch over a
+    // store that HAS the index must maintain it too: its names enter the
+    // cumulative mention
     // universe, and a later lsh batch links against the index alone — an
     // unsigned name would be invisible to incremental linking FOREVER
     // (the aliases it should have formed are never derived, so not even
@@ -639,27 +577,17 @@ final class Pipeline(
       val batchSigs = graft.kg.stages.Link
         .bandSignatures(r.mentionVecs.select(col("name")))
       // re-sign the FULL vertex-name universe (not just the batch) when
-      // the stored index cannot be trusted to cover it: absent (legacy
-      // store), pre-v2 (about to be replaced wholesale — its rows carry
-      // the wrong minhashes for every name), or a crashed predecessor (a
+      // the stored index cannot be trusted to cover it: absent (an
+      // exact-mode store's first lsh batch) or a crashed predecessor (a
       // batch that died between its vertices merge and its index append
       // leaves names the incremental probe would otherwise never see
       // again; appendNew makes the reconcile idempotent, O(missing))
       val sigs =
-        if ((!bandIndexStored || bandIndexPreV2 || priorIncomplete) &&
-            verticesPreexisted)
+        if ((!bandIndexStored || priorIncomplete) && verticesPreexisted)
           batchSigs.unionByName(graft.kg.stages.Link
             .bandSignatures(io.read(spark, "vertices").select(col("name"))))
         else batchSigs
-      // a pre-v2 index must be REPLACED, not appended into: its rows
-      // share (name, band) keys with the v2 signatures but carry
-      // old-convention minhashes, and appendNew's first-wins semantics
-      // would keep exactly the wrong rows (one-time migration rewrite)
-      if (bandIndexPreV2)
-        io.overwrite(spark, "lsh_band_index",
-          sigs.dropDuplicates("name", "band"))
-      else io.appendNew(spark, "lsh_band_index", sigs, Seq("name", "band"))
-      io.setFlag(spark, "band_index_v2") // convention stamp (idempotent)
+      io.appendNew(spark, "lsh_band_index", sigs, Seq("name", "band"))
     }
     if (identityMode && !io.exists(spark, "canonical_edges")) {
       // exact-mode store with no canonical tables (see identityMode
@@ -667,13 +595,12 @@ final class Pipeline(
       // create, maintain, or heal.
     } else if (identityMode) {
       // exact batch over a store that HAS canonical tables (an lsh
-      // past, or an older engine's identity duplicates): fold the
-      // batch's base edges into the canonical state under the STORED
-      // cumulative map — never the fresh path, which would overwrite
-      // canonical_map with this batch's (empty) map and orphan the
-      // batch's edges from the canonical image
-      if (config.fullCompaction || priorIncomplete ||
-          !io.exists(spark, "canonical_map")) compact(spark, io, nb)
+      // past): fold the batch's base edges into the canonical state
+      // under the STORED cumulative map — never the fresh path, which
+      // would overwrite canonical_map with this batch's (empty) map and
+      // orphan the batch's edges from the canonical image
+      // (compactDelta full-compacts a store with no canonical_map)
+      if (config.fullCompaction || priorIncomplete) compact(spark, io, nb)
       else compactDelta(spark, io, r.edges, r.aliases, nb)
     } else if (freshFastPath) {
       // the canonical-map table (CC output: LINKED names only, name →
@@ -846,21 +773,15 @@ final class Pipeline(
       batchAliases: Dataset[AliasPair],
       nb: Int): Unit = {
     import spark.implicits._
-    // no stored canonical map (a store written before the table existed):
-    // the delta path cannot locate prior batches' STALE rows — their
-    // partitions are derived from the OLD canonical image of each
-    // affected subject, and without the old map that image is
-    // unknowable (approximating it with the raw name misses rows whose
-    // old canonical was a different name hashing to a different bucket).
-    // Recover with one full rebuild, which also seeds canonical_map.
-    // Same one-full-rebuild recovery for a canonical table laid down by
-    // the pred-hash era (pre-sbucket): its partitions are not addressable
-    // under the subject-hash discovery below; compact() re-lays it.
-    if (!io.exists(spark, "canonical_map") ||
-        (io.exists(spark, "canonical_edges") &&
-          !io.read(spark, "canonical_edges").columns.contains("sbucket"))) {
-      compact(spark, io, nb); return
-    }
+    // no stored canonical map (the first lsh batch over an exact-mode
+    // store, which never materializes canonical tables): the delta path
+    // cannot locate prior batches' STALE rows — their partitions are
+    // derived from the OLD canonical image of each affected subject, and
+    // without the old map that image is unknowable (approximating it
+    // with the raw name misses rows whose old canonical was a different
+    // name hashing to a different bucket). Recover with one full
+    // rebuild, which also seeds canonical_map.
+    if (!io.exists(spark, "canonical_map")) { compact(spark, io, nb); return }
     // join-strategy governance: ALL the map-side (and batch-derived-set)
     // joins below broadcast by default; under saltedCanonicalJoin — the
     // regime where the linked-name set outgrows executor memory — every
@@ -945,11 +866,7 @@ final class Pipeline(
       //     (pred → sbuckets holding it), pruned by the changed names'
       //     pred-hash buckets.
       // Every leg reads only buckets the batch's names / the map diff
-      // reach, so the per-batch read scales with the batch, not the
-      // store — under the pred-hash layout these passes were full-table
-      // scans AND selected every occupied bucket at the reference
-      // corpus's ~10-pred lexicon (round-7 BatchReadProbe: full
-      // canonical-pair rewrite every batch).
+      // reach, so the per-batch read scales with the batch, not the store.
       val changedNames = inc.changed.localCheckpoint()
       val changedMark = hinted(changedNames)
       val changedBuckets = changedNames
@@ -1037,61 +954,43 @@ final class Pipeline(
       // canonical_edge_entity_index maintenance, EXACT-DIFF: most of a
       // rebuilt sbucket's rows are regenerated IDENTICALLY (only edges
       // touching an affected name change image), so rewriting every
-      // ebucket the rebuilt content reaches — the round-4..7 diff-free
-      // design — amplified the index write to ~the full table whenever
-      // the rebuilt rows' entities saturated the bucket space (round-7
-      // BatchReadProbe: 9.3 of 9.3 MB for a 10-doc batch at 256
+      // ebucket the rebuilt content reaches amplified the index write to
+      // ~the full table whenever the rebuilt rows' entities saturated the
+      // bucket space (measured: 9.3 of 9.3 MB for a 10-doc batch at 256
       // buckets). Diffing old vs new index images of the rebuilt buckets
-      // costs two anti-joins over O(batch reach) rows — cheap under the
-      // subject-hash layout where the rebuilt content is small (the
-      // round-4 measurement that ruled diffing out was over the pred
-      // layout's full-table rebuilds) — and shrinks the rewrite to the
-      // ebuckets of rows that ACTUALLY changed: O(batch reach) dirs.
+      // costs two anti-joins over O(batch reach) rows and shrinks the
+      // rewrite to the ebuckets of rows that ACTUALLY changed.
       // Production analogue: Iceberg equality deletes (merge-on-read).
       // Invariant: index == canonicalIndexRows(canonical_edges),
       // asserted in CanonicalQuerySuite.
-      val preUpgrade = !io.exists(spark, "canonical_edge_entity_index") ||
-        !io.read(spark, "canonical_edge_entity_index")
-          .columns.contains("sbucket")
-      if (preUpgrade) {
-        // store written before the index existed (round-4 engine) or
-        // before rows carried the source-edge bucket column (including
-        // the pred-hash era's pbucket): one-time wholesale backfill
-        // from the just-swapped table
-        io.overwrite(spark, "canonical_edge_entity_index",
-          Pipeline.canonicalIndexRows(io.read(spark, "canonical_edges")
-            .select("subj", "pred", "obj", "label", "sourceChunkId"), nb),
-          Seq("ebucket"))
-      } else {
-        val rowCols = Seq("entity", "subj", "pred", "obj", "label",
-          "sourceChunkId")
-        val oldIdx = Pipeline.canonicalIndexRows(oldContent, nb)
-        val newIdx = Pipeline.canonicalIndexRows(
-          newContent.select("subj", "pred", "obj", "label", "sourceChunkId"),
-          nb)
-        // rows are unique in rowCols within each side (content is keyed
-        // on (subj,pred,obj)), and a diff row cannot collide with an
-        // untouched bucket's row (same subj ⇒ same sbucket ⇒ that bucket
-        // was rebuilt), so drop/add is an exact set update
-        val dropRows = oldIdx.join(hinted(newIdx), rowCols, "left_anti")
-          .localCheckpoint()
-        val addRows = newIdx.join(hinted(oldIdx), rowCols, "left_anti")
-          .localCheckpoint()
-        val ebuckets = (dropRows.select($"ebucket")
-          .unionByName(addRows.select($"ebucket"))
-          .distinct().as[Int].collect().toSeq)
-        if (ebuckets.nonEmpty) {
-          val carried = io.read(spark, "canonical_edge_entity_index")
-            .filter($"ebucket".isin(ebuckets: _*)) // partition-pruned
-            .join(hinted(dropRows.select(rowCols.map(col): _*)),
-              rowCols, "left_anti")
-            .select("entity", "subj", "pred", "obj", "label",
-              "sourceChunkId", "ebucket", "sbucket")
-          io.overwritePartitions(spark, "canonical_edge_entity_index",
-            carried.unionByName(addRows), "ebucket", ebuckets)
-        } // empty diff: the rebuild regenerated identical images — the
-          // index is untouched on storage
-      }
+      val rowCols = Seq("entity", "subj", "pred", "obj", "label",
+        "sourceChunkId")
+      val oldIdx = Pipeline.canonicalIndexRows(oldContent, nb)
+      val newIdx = Pipeline.canonicalIndexRows(
+        newContent.select("subj", "pred", "obj", "label", "sourceChunkId"),
+        nb)
+      // rows are unique in rowCols within each side (content is keyed
+      // on (subj,pred,obj)), and a diff row cannot collide with an
+      // untouched bucket's row (same subj ⇒ same sbucket ⇒ that bucket
+      // was rebuilt), so drop/add is an exact set update
+      val dropRows = oldIdx.join(hinted(newIdx), rowCols, "left_anti")
+        .localCheckpoint()
+      val addRows = newIdx.join(hinted(oldIdx), rowCols, "left_anti")
+        .localCheckpoint()
+      val ebuckets = (dropRows.select($"ebucket")
+        .unionByName(addRows.select($"ebucket"))
+        .distinct().as[Int].collect().toSeq)
+      if (ebuckets.nonEmpty) {
+        val carried = io.read(spark, "canonical_edge_entity_index")
+          .filter($"ebucket".isin(ebuckets: _*)) // partition-pruned
+          .join(hinted(dropRows.select(rowCols.map(col): _*)),
+            rowCols, "left_anti")
+          .select("entity", "subj", "pred", "obj", "label",
+            "sourceChunkId", "ebucket", "sbucket")
+        io.overwritePartitions(spark, "canonical_edge_entity_index",
+          carried.unionByName(addRows), "ebucket", ebuckets)
+      } // empty diff: the rebuild regenerated identical images — the
+        // index is untouched on storage
       // vertex pointer refresh: only partitions holding an affected name;
       // EVERY row in them gets its pointer regenerated from the new map
       // (idempotent for unaffected rows — their image is unchanged there)

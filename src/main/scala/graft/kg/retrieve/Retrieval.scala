@@ -44,14 +44,9 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
   /** TF aggregation over a terms frame: in-flight terms carry one row per
     * occurrence (count them); the materialized table is deduped on the
     * MERGE key with an explicit `tf` multiplicity column (sum it) — same
-    * TF score either way. A store created by an older engine version has
-    * its pre-existing rows null-filled on `tf` by the schema-evolution
-    * MERGE (see [[graft.kg.pipeline.GraphTableIO]]) — a deduped row
-    * represents tf ≥ 1, so nulls score as 1 instead of poisoning the sum
-    * to NULL (which would rank old-store chunks last with null scores). */
+    * TF score either way. */
   private def tfScore(terms: DataFrame): org.apache.spark.sql.Column =
-    if (terms.columns.contains("tf"))
-      sum(coalesce(col("tf"), lit(1L))).cast("double")
+    if (terms.columns.contains("tf")) sum(col("tf")).cast("double")
     else count(lit(1)).cast("double")
 
   /** Partition-prune a MATERIALIZED terms table by the query's term-hash
@@ -59,17 +54,15 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     * `tbucket = pmod(hash(text), NumBuckets)` dirs (see
     * [[Pipeline.materialize]]), and the bucket ids of a literal term list
     * fold at plan time — the scan then reads ≤ |query terms| of the
-    * NumBuckets directories. The `isNull` arm keeps rows a pre-tbucket
-    * engine version wrote (schema evolution null-fills them into the
-    * default partition — pruning is an optimization, never a filter).
-    * In-flight frames (no tbucket column) pass through untouched. */
+    * NumBuckets directories. In-flight frames (no tbucket column) pass
+    * through untouched. */
   private def pruneTermBuckets(terms: DataFrame, qTerms: Seq[String]): DataFrame =
     if (!terms.columns.contains("tbucket")) terms
     else {
       // bucket ids via the SAME Murmur3 `hash` expression the writer
       // used, constant-folded driver-side (bucketOfLit — no job)
       val buckets = bucketsOfLits(qTerms)
-      terms.filter(col("tbucket").isin(buckets: _*) || col("tbucket").isNull)
+      terms.filter(col("tbucket").isin(buckets: _*))
     }
 
   /** A1 per-chunk term relevance as an unordered (chunkId, score) frame
@@ -402,7 +395,7 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     *
     * Scale shape: the canonical-map probe collects ≤ |query entities|
     * rows from a cbucket-partition-pruned scan of the non-identity map
-    * (a map written by a pre-layout engine passes through unpruned), and
+    * (the facade's empty stand-in for a missing map has no cbucket), and
     * the edge lookup partition-prunes on the canonical entities' ebucket
     * ids exactly like [[relationshipSearchIndexed]] — per-query I/O is
     * bounded by |entities| bucket directories of each table, never a
@@ -416,15 +409,12 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     val resultCols =
       Seq($"subj", $"pred", $"obj", $"label", $"sourceChunkId", $"entity")
     if (entities.isEmpty) return canonEdgeIndex.select(resultCols: _*).limit(0)
-    // surface form → canonical name (identity when unlinked); the isNull
-    // arm keeps rows a pre-cbucket engine version wrote. The map probe's
-    // collect is the lookup's ONE job — every bucket id folds driver-side
+    // surface form → canonical name (identity when unlinked). The map
+    // probe's collect is the lookup's ONE job — every bucket id folds
+    // driver-side
     val mapPruned =
       if (!canonMap.columns.contains("cbucket")) canonMap
-      else {
-        val bs = bucketsOfLits(entities)
-        canonMap.filter($"cbucket".isin(bs: _*) || $"cbucket".isNull)
-      }
+      else canonMap.filter($"cbucket".isin(bucketsOfLits(entities): _*))
     val canonOf = mapPruned.filter($"name".isin(entities: _*))
       .select("name", "canonicalName").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap

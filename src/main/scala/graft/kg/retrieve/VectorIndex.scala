@@ -35,9 +35,7 @@ import org.apache.spark.sql.functions._
   * are a deterministic pure function of the indexed vectors, stored once
   * in the `chunk_vec_meta` sidecar at index build and FROZEN for later
   * incremental merges (re-thresholding would invalidate the already-laid
-  * partitions; a full index rebuild recomputes them). All-zero
-  * thresholds reproduce the legacy layout, which stores written before
-  * the sidecar existed fall back to.
+  * partitions; a full index rebuild recomputes them).
   */
 object VectorIndex {
   /** L hash tables: each chunk is stored once per table (L× storage —
@@ -66,18 +64,20 @@ object VectorIndex {
     }
   }
 
-  /** All-zero thresholds — the legacy raw-sign layout. */
+  /** All-zero thresholds — the raw-sign cut, the default of
+    * [[queryBuckets]]. */
   def zeroThresholds: Array[Double] = Array.fill(NumPlanes)(0.0)
 
   /** Decode the `chunk_vec_meta` sidecar: the per-plane thresholds in
-    * pid order, or None when the store has no sidecar. The ONE reader
-    * of the sidecar schema — engine, bench and tests all go through it
-    * so a schema change cannot silently diverge between them. */
+    * pid order, or None when the store has no sidecar or an empty one
+    * (`GraphRag.reset` truncates it). The ONE reader of the sidecar
+    * schema — engine, bench and tests all go through it so a schema
+    * change cannot silently diverge between them. */
   def readThresholds(spark: org.apache.spark.sql.SparkSession,
       io: graft.kg.pipeline.GraphTableIO): Option[Array[Double]] =
     if (!io.exists(spark, "chunk_vec_meta")) None
     else Some(io.read(spark, "chunk_vec_meta").orderBy("pid")
-      .collect().map(_.getAs[Double]("threshold")))
+      .collect().map(_.getAs[Double]("threshold"))).filter(_.nonEmpty)
 
   /** Per-plane dataset-median projection thresholds, in ONE aggregation
     * pass over the embeddings (24 exact-percentile aggs on the projection
@@ -118,10 +118,9 @@ object VectorIndex {
 
   /** Max over planes of |positive-side fraction − 0.5| of `embeddings`
     * under `thresholds`; None when the frame holds fewer than `minRows`
-    * rows (too noisy to act on) or the threshold geometry mismatches. */
+    * rows (too noisy to act on). */
   def occupancySkew(embeddings: DataFrame, dim: Int,
       thresholds: Array[Double], minRows: Long = StaleMinRows): Option[Double] = {
-    if (thresholds.length != NumPlanes) return None
     val aggs = (0 until NumPlanes).map { pid =>
       avg(when(dot_product(col("vec"), typedLit(planeWeights(pid, dim)))
         > thresholds(pid), 1.0).otherwise(0.0)).as(s"f_$pid")
@@ -170,10 +169,6 @@ object VectorIndex {
       embeddings.select(col("chunkId"), col("vec"),
         lit(l).as("l"), bucketExpr(col("vec"), dim, l, thresholds).as("vbucket"))
     }.reduce(_ unionByName _)
-
-  /** Legacy raw-sign layout (zero thresholds). */
-  def layout(embeddings: DataFrame, dim: Int): DataFrame =
-    layout(embeddings, dim, zeroThresholds)
 
   /** Probes per table of the default query: chosen from the AnnSweep
     * recall/read table in BENCH/BASELINE.md — 32 of the 256 buckets per

@@ -82,9 +82,7 @@ object Link {
     * wrap names identically, or blocking diverges between modes for
     * short/boundary names (begin/end sentinels weight a name's edges
     * into distinct shingles). Single definition = parity by
-    * construction; the stored index carries the `band_index_v2` flag so
-    * a store signed under an older convention is rebuilt wholesale, not
-    * probed across conventions. */
+    * construction. */
   private[kg] def sentinelWrapped(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat(lit("\u0001"), lower(c), lit("\u0002"))
 

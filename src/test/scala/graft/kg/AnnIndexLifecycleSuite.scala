@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lifecycle of the stored ANN layout (`chunk_vec_index` +
-  * `chunk_vec_meta`): a store whose sidecar is missing or from another
-  * geometry must NEVER be probed or merged into under the current
-  * geometry — queries fall back to the exact scan, and the next ingest
-  * rebuilds the index wholesale under fresh medians.
+  * `chunk_vec_meta`): an index whose sidecar is missing, or which a
+  * crashed batch may have laid under other thresholds than its sidecar's,
+  * must NEVER be probed or appended to — queries fall back to the exact
+  * scan, and the next ingest rebuilds the index wholesale under fresh
+  * medians.
   */
 class AnnIndexLifecycleSuite extends AnyFunSuite {
   lazy val spark = SparkSessionFixture.spark
@@ -30,27 +31,60 @@ class AnnIndexLifecycleSuite extends AnyFunSuite {
       .select("chunkId", "l", "vbucket").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
 
+  /** Overwrites the stored index with the layout of the stored
+    * embeddings under zero thresholds — an index laid under other
+    * thresholds than the medians the store computed — and returns the
+    * thresholds the store had. */
+  private def relayUnderZeroThresholds(io: ParquetTableIO): Array[Double] = {
+    val emb = new embed.HashEmbedder()
+    val t = VectorIndex.readThresholds(spark, io).get
+    io.overwrite(spark, "chunk_vec_index",
+      VectorIndex.layout(io.read(spark, "chunk_embeddings"), emb.dim,
+        VectorIndex.zeroThresholds),
+      Seq("l", "vbucket"))
+    val stale = VectorIndex.layout(io.read(spark, "chunk_embeddings"),
+      emb.dim, t).select("chunkId", "l", "vbucket").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    assert(indexAsSet(io) != stale, "fixture dead: zero cuts == medians")
+    t
+  }
+
+  /** The store's index equals the layout of its cumulative embeddings
+    * under its own sidecar, and the sidecar holds their medians. */
+  private def indexMatchesSidecar(io: ParquetTableIO): Unit = {
+    val emb = new embed.HashEmbedder()
+    val t = VectorIndex.readThresholds(spark, io)
+    assert(t.isDefined, "no sidecar after ingest")
+    assert(t.get.toSeq == VectorIndex.computeThresholds(
+      io.read(spark, "chunk_embeddings"), emb.dim).toSeq,
+      "sidecar thresholds are not the cumulative medians")
+    val expected = VectorIndex
+      .layout(io.read(spark, "chunk_embeddings"), emb.dim, t.get)
+      .select("chunkId", "l", "vbucket").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    assert(indexAsSet(io) == expected,
+      "index != layout(chunk_embeddings, sidecar)")
+  }
+
   test("no-sidecar legacy index: query falls back to exact; next ingest rebuilds") {
     val (io, root) = freshStore()
     val cfg = GraftConfig(linkMode = "exact")
     new Pipeline(cfg).materialize(corpus(11L), io)
     assert(io.exists(spark, "chunk_vec_meta"))
 
-    // simulate a legacy store: an index laid down by an engine that
-    // never wrote a sidecar — and whose GEOMETRY differs from the
-    // current one (half the current bucket id space, as the raw-sign
-    // K=6 era produced): queries must not probe it with current math
-    val legacyIndex = io.read(spark, "chunk_embeddings")
-      .select(col("chunkId"), col("vec"), lit(0).as("l"),
-        pmod(crc32(col("chunkId")), lit(64)).cast("int").as("vbucket"))
-    io.overwrite(spark, "chunk_vec_index", legacyIndex, Seq("l", "vbucket"))
+    // the index left behind by a rebuild that crashed between its index
+    // swap and its sidecar write, in a store whose sidecar is gone: laid
+    // under thresholds the store does not record, and the in-flight
+    // marker still set
+    relayUnderZeroThresholds(io)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/chunk_vec_meta"), true)
     assert(!io.exists(spark, "chunk_vec_meta"))
+    io.setFlag(spark, "batch_inflight")
 
     // ann query on the sidecar-less store == the exact path (fallback),
-    // NOT a probe of the alien layout
+    // NOT a probe of a layout whose thresholds are unknown
     val rag = new GraphRag(spark, io, cfg)
     val s = spark; import s.implicits._
     val q = io.read(spark, "chunks").as[Chunk].orderBy("chunkId").head().text
@@ -60,28 +94,34 @@ class AnnIndexLifecycleSuite extends AnyFunSuite {
       .chunks.select("chunkId").collect().map(_.getString(0)).toSeq
     assert(ann == exact, "sidecar-less store did not fall back to the exact scan")
 
-    // the next ingest detects {index, no sidecar} as a geometry upgrade:
-    // wholesale rebuild from the cumulative embeddings under FRESH
-    // medians — not zero thresholds, not a merge into the alien dirs
+    // the next ingest rebuilds wholesale from the cumulative embeddings
+    // under FRESH medians — not zero thresholds, not a merge into the
+    // unknown layout
     new Pipeline(cfg).materialize(corpus(12L), io)
-    val t = VectorIndex.readThresholds(spark, io)
-    assert(t.exists(_.length == VectorIndex.NumPlanes), "sidecar not rebuilt")
-    assert(t.get.exists(_ != 0.0), "rebuild pinned zero thresholds")
-    val emb = new embed.HashEmbedder()
-    val expectedT = VectorIndex.computeThresholds(
-      io.read(spark, "chunk_embeddings"), emb.dim)
-    assert(t.get.toSeq == expectedT.toSeq,
-      "rebuilt thresholds are not the cumulative medians")
-    val expected = VectorIndex
-      .layout(io.read(spark, "chunk_embeddings"), emb.dim, expectedT)
-      .select("chunkId", "l", "vbucket").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
-    assert(indexAsSet(io) == expected,
-      "index content is not the wholesale current-geometry rebuild")
-    // and the migrated store serves ann queries again (sidecar present)
+    indexMatchesSidecar(io)
+    assert(VectorIndex.readThresholds(spark, io).get.exists(_ != 0.0),
+      "rebuild pinned zero thresholds")
+    // and the healed store serves ann queries again (sidecar present)
     val rag2 = new GraphRag(spark, io, cfg)
     assert(rag2.query(q, includeTriplets = false, vectorMode = "ann")
       .chunks.collect().nonEmpty)
+  }
+
+  test("a rebuild crashed between its index swap and its sidecar write " +
+      "is rebuilt by the next batch, not appended to") {
+    val (io, _) = freshStore()
+    val cfg = GraftConfig(linkMode = "exact")
+    new Pipeline(cfg).materialize(corpus(21L), io)
+    // the index is already laid under new cuts, the sidecar still holds
+    // the old ones (same length), and the in-flight marker is set
+    val stale = relayUnderZeroThresholds(io)
+    assert(VectorIndex.readThresholds(spark, io).get.toSeq == stale.toSeq)
+    io.setFlag(spark, "batch_inflight")
+    // a small batch: the skew probe cannot act, so only the crash marker
+    // can route it away from an append under the stale sidecar
+    new Pipeline(cfg).materialize(corpus(22L), io)
+    assert(!io.flagSet(spark, "batch_inflight"), "marker not cleared")
+    indexMatchesSidecar(io)
   }
 
   test("occupancy-skew probe: shifted batch triggers a threshold rebuild") {
@@ -133,28 +173,5 @@ class AnnIndexLifecycleSuite extends AnyFunSuite {
     // either way the index stays self-consistent: every chunk indexed
     assert(io.read(spark, "chunk_vec_index").select("chunkId").distinct().count() ==
       io.read(spark, "chunk_embeddings").count())
-  }
-
-  test("mismatched-geometry sidecar: rebuilt wholesale on next ingest") {
-    val (io, _) = freshStore()
-    val cfg = GraftConfig(linkMode = "exact")
-    new Pipeline(cfg).materialize(corpus(13L), io)
-    // sidecar from a smaller-plane-count era
-    val s = spark; import s.implicits._
-    io.overwrite(spark, "chunk_vec_meta",
-      (0 until 24).map(i => (i, 0.0)).toDF("pid", "threshold"))
-    // query falls back to exact while mismatched
-    val rag = new GraphRag(spark, io, cfg)
-    val q = io.read(spark, "chunks").as[Chunk].orderBy("chunkId").head().text
-    assert(rag.query(q, includeTriplets = false, vectorMode = "ann")
-      .chunks.select("chunkId").collect().toSeq ==
-      rag.query(q, includeTriplets = false)
-        .chunks.select("chunkId").collect().toSeq)
-    new Pipeline(cfg).materialize(corpus(14L), io)
-    val t = VectorIndex.readThresholds(spark, io)
-    assert(t.exists(_.length == VectorIndex.NumPlanes))
-    val emb = new embed.HashEmbedder()
-    assert(t.get.toSeq == VectorIndex.computeThresholds(
-      io.read(spark, "chunk_embeddings"), emb.dim).toSeq)
   }
 }

@@ -139,53 +139,4 @@ class CanonicalQuerySuite extends AnyFunSuite {
     assert(preds == Set("imports module", "calls function"),
       s"upgrade lost cross-mode reachability: $preds")
   }
-
-  test("pre-upgrade store (no canonical index): backfilled by the next batch") {
-    val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val root = java.nio.file.Files.createTempDirectory("graftcanonup").toString
-    val io = new ParquetTableIO(root)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(0)), io)
-    // simulate a round-4 store: the canonical index table never existed
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$root/canonical_edge_entity_index"), true)
-    assert(!io.exists(spark, "canonical_edge_entity_index"))
-    // facade on the pre-upgrade store: falls back to the base-edge path
-    val ragOld = new GraphRag(spark, io, cfg)
-    assert(ragOld.query("What is Batchengine?").triplets.get.collect().nonEmpty)
-    // the next incremental batch backfills the index wholesale
-    new Pipeline(cfg).materialize(spark.createDataset(batches(1)), io)
-    assert(io.exists(spark, "canonical_edge_entity_index"))
-    indexInvariant(io)
-    val rag = new GraphRag(spark, io, cfg)
-    val preds = rag.query("What is Batchengine?").triplets.get.collect()
-      .filter(_.getAs[String]("entity") == "batchengine")
-      .map(_.getAs[String]("pred")).toSet
-    assert(preds == Set("imports module", "calls function"))
-  }
-
-  test("index without sbucket (pre-column store): backfilled wholesale") {
-    val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val io = new ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("graftcanonpb").toString)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(0)), io)
-    // simulate a store written before index rows carried the source-edge
-    // bucket column: delta maintenance cannot locate a rebuilt bucket's
-    // rows in it, so the next batch must rebuild the index wholesale
-    io.overwrite(spark, "canonical_edge_entity_index",
-      io.read(spark, "canonical_edge_entity_index").drop("sbucket"),
-      Seq("ebucket"))
-    assert(!io.read(spark, "canonical_edge_entity_index")
-      .columns.contains("sbucket"))
-    new Pipeline(cfg).materialize(spark.createDataset(batches(1)), io)
-    indexInvariant(io) // backfilled, sbucket present and correct
-    val rag = new GraphRag(spark, io, cfg)
-    val preds = rag.query("What is Batchengine?").triplets.get.collect()
-      .filter(_.getAs[String]("entity") == "batchengine")
-      .map(_.getAs[String]("pred")).toSet
-    assert(preds == Set("imports module", "calls function"))
-  }
 }

@@ -143,24 +143,28 @@ class CompactionSuite extends AnyFunSuite {
 
   test("delta compaction recovers a store with no canonical_map (pre-upgrade)") {
     val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val root = java.nio.file.Files.createTempDirectory("graftnomap").toString
-    val io = new ParquetTableIO(root)
-    new Pipeline(cfg).materialize(spark.createDataset(batches.head), io)
-    // simulate a store written before the canonical_map table existed
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/canonical_map"), true)
-    assert(!io.exists(spark, "canonical_map"))
-    // the next incremental batch detects the missing map, falls back to
-    // ONE full rebuild (stale prior rows are unlocatable without the old
-    // map), re-seeds canonical_map, and later batches go back to delta
-    batches.tail.foreach(b =>
-      new Pipeline(cfg).materialize(spark.createDataset(b), io))
-    val full = ingest(cfg.copy(fullCompaction = true))
+    val lsh = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    // the store before its upgrade from exact to lsh linking: an
+    // exact-mode batch lays down base tables only (no canonical_map);
+    // the first lsh batch's delta compaction cannot locate stale prior
+    // rows without the old map, falls back to ONE full rebuild that
+    // seeds canonical_map, and the batch after it goes back to delta
+    def exactThenLsh(cfg: GraftConfig): ParquetTableIO = {
+      val io = new ParquetTableIO(
+        java.nio.file.Files.createTempDirectory("graftnomap").toString)
+      new Pipeline(GraftConfig(linkMode = "exact"))
+        .materialize(spark.createDataset(batches.head), io)
+      assert(!io.exists(spark, "canonical_map"))
+      batches.tail.foreach(b =>
+        new Pipeline(cfg).materialize(spark.createDataset(b), io))
+      io
+    }
+    val delta = exactThenLsh(lsh)
+    val full = exactThenLsh(lsh.copy(fullCompaction = true))
     Seq("canonical_edges", "canonical_edge_entity_index", "vertices", "canonical_map").foreach { t =>
-      assert(state(io, t) == state(full, t),
+      assert(state(delta, t) == state(full, t),
         s"table $t diverged recovering from a mapless store")
+      assert(state(delta, t).nonEmpty, s"table $t empty")
     }
   }
 
@@ -401,13 +405,14 @@ class CompactionSuite extends AnyFunSuite {
     val fp = io.snapshotFp(spark, "t")
     io.merge(spark, "t", base.limit(0), Seq("k"), Seq("pb"))
     assert(io.snapshotFp(spark, "t") == fp, "empty delta perturbed storage")
-    // a schema-evolving delta (new column) falls back to the full
-    // rewrite and null-fills the old rows
+    // a delta with another column set is rejected before any write (no
+    // schema evolution: the store format fixes every table's columns)
     val evolved = Seq(("k2", "v2", 2, 7L)).toDF("k", "v", "pb", "extra")
-    io.merge(spark, "t", evolved, Seq("k"), Seq("pb"))
-    val rows = io.read(spark, "t")
-    assert(rows.columns.contains("extra"))
-    assert(rows.filter(col("extra").isNull).count() == 40)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      io.merge(spark, "t", evolved, Seq("k"), Seq("pb"))
+    }
+    assert(io.snapshotFp(spark, "t") == fp, "rejected delta touched storage")
+    assert(!io.read(spark, "t").columns.contains("extra"))
   }
 
   test("partitioned appendNew appends into bucket dirs without rewrites") {
@@ -715,49 +720,6 @@ class CompactionSuite extends AnyFunSuite {
       s"pruned-at-256 facade lookup != full scan: $viaIdx vs $full")
   }
 
-  test("pre-v2 band index is rebuilt wholesale on migration, links intact") {
-    val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val io = new ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("graftmigr").toString)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(0)), io)
-    // a current-convention store carries the stamp
-    assert(io.flagSet(spark, "band_index_v2"))
-    // regress to the pre-v2 world: strip the stamp and scramble the
-    // stored minhashes (an old-convention index disagrees with v2 on
-    // every value — probing it with v2 batch signatures finds nothing)
-    io.overwrite(spark, "lsh_band_index",
-      io.read(spark, "lsh_band_index")
-        .withColumn("mh", concat(lit("old"), col("mh"))))
-    io.clearFlag(spark, "band_index_v2")
-    // next batch: "batch engine" must still link to batch-1's
-    // "batchengine" — impossible by cross-convention probing, so the
-    // engine must fall back to full-universe linking AND rebuild
-    new Pipeline(cfg).materialize(spark.createDataset(batches(1)), io)
-    assert(io.flagSet(spark, "band_index_v2"), "migration did not restamp")
-    val canon = io.read(spark, "canonical_map")
-      .select("name", "canonicalName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(canon.contains("batch engine") || canon.contains("batchengine"),
-      s"cross-batch link lost across index migration: ${canon.keySet}")
-    // the rebuilt index is EXACTLY the v2 signatures of its name universe
-    // (no old-convention survivors under first-wins append semantics)
-    val stored = io.read(spark, "lsh_band_index").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    val expect = stages.Link
-      .bandSignatures(io.read(spark, "lsh_band_index").select("name").distinct())
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    assert(stored == expect, "stored index rows are not pure v2 signatures")
-    // and a THIRD batch probes the migrated index on the fast path
-    // (bandIndex present + stamped) with results equal to a full rebuild
-    new Pipeline(cfg).materialize(spark.createDataset(batches(2)), io)
-    val canon3 = io.read(spark, "canonical_map")
-      .select("name", "canonicalName").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(canon3.contains("parse tree") || canon3.contains("parsetree"),
-      s"post-migration incremental link missing: ${canon3.keySet}")
-  }
-
   test("FLAT appendNew tables stay file-bounded over a long batch horizon") {
     val s = spark; import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graftflat").toString
@@ -854,8 +816,8 @@ class CompactionSuite extends AnyFunSuite {
   // edge_entity_index completeness is canonical-state-bearing: delta
   // compaction's affected-edge pass reads the index instead of scanning
   // every base edge, so an index missing rows would silently skip
-  // canonical partitions. The merge site heals the two untrustworthy
-  // shapes with a wholesale rebuild.
+  // canonical partitions. The merge site heals a crashed predecessor's
+  // index with a wholesale rebuild.
   private def indexMatchesEdges(io: ParquetTableIO): Unit = {
     val expected = Pipeline.entityIndexRows(io.read(spark, "edges")
       .select("subj", "pred", "obj", "label", "sourceChunkId"))
@@ -864,22 +826,6 @@ class CompactionSuite extends AnyFunSuite {
       .collect().map(_.mkString("|")).toSet
     assert(state(io, "edge_entity_index") == exp,
       "edge_entity_index != entityIndexRows(edges)")
-  }
-
-  test("a legacy store without edge_entity_index gets a full backfill") {
-    val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val root = java.nio.file.Files.createTempDirectory("graftidxleg").toString
-    val io = new ParquetTableIO(root)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(0)), io)
-    // simulate a store written before the index existed
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/edge_entity_index"), true)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(1)), io)
-    // a delta-only merge would cover only batch 2's edges; the heal
-    // rebuilds from the cumulative merged table
-    indexMatchesEdges(io)
   }
 
   test("a crashed predecessor's missing index rows are healed wholesale") {
@@ -939,50 +885,6 @@ class CompactionSuite extends AnyFunSuite {
       assert(state(delta, t) == state(full, t),
         s"$t diverged with a changed predicate name")
     }
-  }
-
-  test("a pred-hash-era store (pbucket layout) is migrated in place") {
-    val s = spark; import s.implicits._
-    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
-    val root = java.nio.file.Files.createTempDirectory("graftmigr").toString
-    val io = new ParquetTableIO(root)
-    new Pipeline(cfg).materialize(spark.createDataset(batches(0)), io)
-    // rewrite the store into the round-4..6 shape: edges and the
-    // canonical pair bucketed by pred hash, no pred_index registry
-    def toPredLayout(t: String): Unit =
-      io.overwrite(spark, t,
-        io.read(spark, t).drop("sbucket")
-          .withColumn("pbucket", pmod(hash(col("pred")), lit(32))),
-        Seq("pbucket"))
-    toPredLayout("edges")
-    toPredLayout("canonical_edges")
-    io.overwrite(spark, "canonical_edge_entity_index",
-      io.read(spark, "canonical_edge_entity_index").drop("sbucket")
-        .withColumn("pbucket", pmod(hash(col("pred")), lit(32))),
-      Seq("ebucket"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/pred_index"), true)
-    assert(!io.read(spark, "edges").columns.contains("sbucket"))
-    // the next batches re-lay edges under sbucket, rebuild pred_index
-    // from the merged table, and full-compact the canonical pair once
-    batches.tail.foreach(b =>
-      new Pipeline(cfg).materialize(spark.createDataset(b), io))
-    val full = ingest(cfg.copy(fullCompaction = true))
-    Seq("canonical_edges", "canonical_edge_entity_index", "vertices",
-      "canonical_map").foreach { t =>
-      assert(state(io, t) == state(full, t), s"$t diverged after migration")
-    }
-    assert(io.read(spark, "edges").columns.contains("sbucket"))
-    assert(!io.read(spark, "edges").columns.contains("pbucket"))
-    assert(new java.io.File(s"$root/edges").listFiles()
-      .exists(_.getName.startsWith("sbucket=")), "edges not re-laid")
-    // the registry matches the merged edge set
-    val regPairs = io.read(spark, "pred_index").select("pred", "sbucket")
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    val edgePairs = io.read(spark, "edges").select("pred", "sbucket")
-      .distinct().collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(regPairs == edgePairs, "pred_index != distinct edge pairs")
   }
 
   // exact-diff index maintenance: a batch whose canonical rebuild

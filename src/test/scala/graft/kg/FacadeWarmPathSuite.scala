@@ -1,6 +1,6 @@
 package graft.kg
 
-import graft.kg.pipeline.{GraphTableIO, ParquetTableIO}
+import graft.kg.pipeline.{GraphTableIO, ParquetTableIO, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    ingest/reset;
   *  - a facade that resolved `num_buckets` while the store was unstamped
   *    re-resolves when a stamp appears (a reader next to a separate
-  *    writer process must not keep pruning with a stale fallback count).
+  *    writer process must not keep pruning with a stale fallback count);
+  *  - the store-format gate: a fresh store is stamped with
+  *    `format_version` by its first ingest, and a populated store without
+  *    the current stamp is refused by ingest and query alike.
   */
 class FacadeWarmPathSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSessionFixture.spark
@@ -218,6 +221,54 @@ class FacadeWarmPathSuite extends AnyFunSuite {
     // no staged leftover
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "_meta_num_buckets.staged")))
+  }
+
+  test("format gate: the first ingest stamps a fresh store; reset keeps " +
+      "the stamp and the reset store ingests and queries again") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val io = new ParquetTableIO(root)
+    val rag = new GraphRag(spark, io, GraftConfig(linkMode = "exact"))
+    assert(io.getMeta(spark, "format_version").isEmpty)
+    rag.ingest(corpusOf("Alpha imports Beta."))
+    assert(io.getMeta(spark, "format_version").contains(Pipeline.FormatVersion))
+    rag.reset()
+    assert(io.getMeta(spark, "format_version").contains(Pipeline.FormatVersion),
+      "reset dropped the format stamp")
+    rag.ingest(corpusOf("Gamma calls Delta."))
+    assert(rag.query("What does Gamma call?").triplets.get.count() > 0,
+      "post-reset ingest not queryable")
+  }
+
+  test("format gate: an unstamped populated store and a store with " +
+      "another stamp are refused by ingest and by query") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fmtold").toString
+    val io = new ParquetTableIO(root)
+    new GraphRag(spark, io, GraftConfig(linkMode = "exact"))
+      .ingest(corpusOf("Alpha imports Beta."))
+    val before = io.snapshotFp(spark, "edges")
+    def assertRefused(): Unit = {
+      val rag = new GraphRag(spark, io, GraftConfig(linkMode = "exact"))
+      val onIngest = intercept[IllegalStateException] {
+        rag.ingest(corpusOf("Gamma calls Delta."))
+      }
+      assert(onIngest.getMessage.contains("new root"), onIngest.getMessage)
+      val onQuery = intercept[IllegalStateException] {
+        rag.query("What does Alpha import?").chunks.count()
+      }
+      assert(onQuery.getMessage.contains("new root"), onQuery.getMessage)
+      intercept[IllegalStateException] {
+        rag.query("What does Alpha import?").triplets.get.count()
+      }
+      // refused before any write: tables, marker and lease untouched
+      assert(io.snapshotFp(spark, "edges") == before)
+      assert(!io.flagSet(spark, "batch_inflight"))
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(root, "_writer.lock")))
+    }
+    io.clearMeta(spark, "format_version") // written before the stamp existed
+    assertRefused()
+    io.putMeta(spark, "format_version", "0") // another engine's format
+    assertRefused()
   }
 
   test("a failing redo replay at lock acquisition propagates, leaves the " +

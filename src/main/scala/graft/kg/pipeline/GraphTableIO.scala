@@ -45,8 +45,8 @@ trait GraphTableIO extends Serializable {
     * files, so a reader holding a pre-batch listing across a
     * threshold-crossing batch has the same single-writer-window caveat
     * as every swap path here — in-engine consumers cut lineage eagerly
-    * (the incremental linking probe localCheckpoints its band-index
-    * scans) rather than re-scanning a stale listing. `partitionCols`
+    * (the incremental link collects its band-index reads) rather than
+    * re-scanning a stale listing. `partitionCols`
     * appends under the table's partition layout (new files land inside
     * the existing partition dirs). Key-collision semantics are
     * FIRST-WINS (the reference's Neo4j `MERGE ... ON CREATE SET` — a
@@ -359,6 +359,48 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     fs(spark).delete(metaPath(name), false); ()
   }
 
+  /** Per-table schema memo. `spark.read.parquet(path)` runs one Spark
+    * job to infer a schema from a footer; [[read]] instead takes the data
+    * schema from one data file's footer on the driver (the Spark schema
+    * the writer stored there — what that job would infer) and lets the
+    * listing add the partition columns, then remembers the full schema:
+    * a batch reads each table several times (every [[appendNew]] and
+    * [[merge]] reads its table, and so do the pipeline and the facade),
+    * and no read runs a job. A table's schema only changes through
+    * [[writeSwap]] (a full rewrite, or the flat empty tables
+    * `GraphRag.reset` leaves), which drops the entry; every other write
+    * path here (append, partition overwrite, sliver compaction) keeps the
+    * column set. An external writer to the same root needs a fresh
+    * instance, as it already does for [[layoutMemo]] and the facade's
+    * handle cache. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** The Spark data schema stored in the footer of `table`'s first data
+    * file (depth-first, name order), if there is one. */
+  private def footerSchema(spark: SparkSession,
+      table: String): Option[org.apache.spark.sql.types.StructType] = {
+    val hfs = fs(spark)
+    def firstFile(dir: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
+      val visible = hfs.listStatus(dir).filterNot { s =>
+        val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+      visible.find(s => s.isFile && s.getLen > 0).map(_.getPath)
+        .orElse(visible.iterator.filter(_.isDirectory).map(d => firstFile(d.getPath))
+          .collectFirst { case Some(p) => p })
+    }
+    firstFile(new org.apache.hadoop.fs.Path(path(table))).flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+          spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(org.apache.spark.sql.types.DataType.fromJson)
+        .collect { case s: org.apache.spark.sql.types.StructType => s }
+      finally r.close()
+    }
+  }
+
   def read(spark: SparkSession, table: String): DataFrame = {
     // Listing a many-partition LOCAL table with the default
     // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
@@ -378,7 +420,10 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
       if (spark.conf.get(k, "32") == "32") spark.conf.set(k, "16384")
     }
-    spark.read.parquet(path(table))
+    val df = Option(schemaMemo.get(table)).orElse(footerSchema(spark, table))
+      .fold(spark.read.parquet(path(table)))(s => spark.read.schema(s).parquet(path(table)))
+    schemaMemo.put(table, df.schema)
+    df
   }
 
   /** Recursive DATA-file listing via per-directory `listStatus`.
@@ -628,7 +673,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // key side and the union side) and Spark does not dedupe two distinct
     // projections of one subtree — pin it for the duration of the write
     // so an expensive upstream (the chunk→extract chain) executes once
-    val pinned = delta.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val pinned = delta.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+      graft.kg.DriverSide.isLocal(delta)
     val d = if (pinned) delta
       else delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -643,31 +689,34 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       // this partition-level rewrite. Requires same column set and the
       // partitioned physical layout (a reset table is flat) — else the
       // full rewrite below re-lays the whole table.
+      val existing = read(spark, table)
       val bucketSelective = partitionCols.length == 1 &&
-        read(spark, table).schema.fieldNames.toSet ==
-          d.schema.fieldNames.toSet &&
+        existing.schema.fieldNames.toSet == d.schema.fieldNames.toSet &&
         layoutMatches(spark, table, partitionCols)
       if (bucketSelective) {
         val pcol = partitionCols.head
-        val buckets = d.select(col(pcol)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (buckets.nonEmpty) {
-          val deltaKeys = d.select(keys.map(col): _*).distinct()
-          val merged = read(spark, table)
-            .filter(col(pcol).isin(buckets: _*)) // partition-pruned
-            .join(deltaKeys, keys, "left_anti")
-            .unionByName(d)
-            .dropDuplicates(keys)
-          overwritePartitions(spark, table, merged, pcol, buckets)
-        } // empty delta: untouched storage (stable snapshotFp)
+        val buckets = graft.kg.DriverSide.distinctRows(d.select(col(pcol)))
+          .map(_.getInt(0)).toSeq
+        if (buckets.nonEmpty)
+          overwritePartitions(spark, table,
+            upsert(existing.filter(col(pcol).isin(buckets: _*)), d, keys), // partition-pruned
+            pcol, buckets)
+        // empty delta: untouched storage (stable snapshotFp)
         return
       }
-      val merged = read(spark, table)
-        .join(d.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        .unionByName(d)
-        .dropDuplicates(keys)
-      writeSwap(spark, table, merged, partitionCols)
+      writeSwap(spark, table, upsert(existing, d, keys), partitionCols)
     } finally if (!pinned) { d.unpersist(blocking = false); () }
+  }
+
+  /** `existing` rows whose key the delta does not hold, plus the
+    * delta deduped on the key. Every table merge writes has unique keys,
+    * so the delta's own duplicates are the only ones the union can hold,
+    * and the deduped delta is also the anti-join's key side: one shuffle
+    * serves both. */
+  private def upsert(existing: DataFrame, delta: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val d = delta.dropDuplicates(keys)
+    existing.join(d.select(keys.map(col): _*), keys, "left_anti").unionByName(d)
   }
 
   def overwrite(spark: SparkSession, table: String, df: DataFrame,
@@ -679,9 +728,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     val d = delta.dropDuplicates(keys)
     if (!exists(spark, table)) { writeSwap(spark, table, d, partitionCols); return }
     // NOTE on delta consumption: the touched-partition probe below runs
-    // one NARROW (column-pruned) pass per partition column over the
-    // delta plan, and the anti-join/write chain consumes it once in
-    // full via the persisted newRows. Deliberately NOT persisting the
+    // one NARROW (column-pruned) pass over the delta plan, and the
+    // anti-join/write chain consumes it once in full. Deliberately NOT
+    // persisting the
     // full delta here: pinning it materializes every payload column
     // (the vector index delta carries the embedding arrays), and the
     // cache re-reads measured +230 MB/batch of block traffic in the
@@ -694,8 +743,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // directory — fall back to the full MERGE rewrite, which re-lays the
     // whole table under `partitionCols` (one-time cost; later batches
     // append again)
+    val existing = read(spark, table)
     val compatible =
-      read(spark, table).schema.fieldNames.toSet == d.schema.fieldNames.toSet &&
+      existing.schema.fieldNames.toSet == d.schema.fieldNames.toSet &&
         layoutMatches(spark, table, partitionCols)
     if (!compatible) { merge(spark, table, delta, keys, partitionCols); return }
     // new keys only (anti-join against the existing key projection —
@@ -715,55 +765,72 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // between a full key-column scan per batch and reading only the
     // directories the batch lands in; the literal cap keeps a
     // wide-spread delta (every partition touched — no pruning possible)
-    // from planning thousands of useless IN literals.
-    val tableSide = {
-      val base = read(spark, table).select(
-        (keys ++ partitionCols).distinct.map(col): _*)
-      val pruned = partitionCols.foldLeft(base) { (df, pc) =>
-        val vals = d.select(col(pc)).distinct().limit(513).collect()
-          .map(_.get(0))
-        if (vals.length > 512) df else df.filter(col(pc).isin(vals: _*))
+    // from planning thousands of useless IN literals. The touched
+    // partition tuples come from ONE map-only pass over the undeduped
+    // delta (dedup keeps a subset of its rows, and the partition columns
+    // are functions of the key); no tuple means an empty delta, which
+    // must not touch storage.
+    val base = existing.select((keys ++ partitionCols).distinct.map(col): _*)
+    val tableSide =
+      if (partitionCols.isEmpty) base
+      else {
+        val tuples = graft.kg.DriverSide.distinctRows(
+          delta.select(partitionCols.map(col): _*))
+        if (tuples.isEmpty) return
+        partitionCols.indices.foldLeft(base) { (df, i) =>
+          val vals = tuples.map(_.get(i)).distinct
+          if (vals.length > 512) df else df.filter(col(partitionCols(i)).isin(vals: _*))
+        }
       }
-      pruned.select(keys.map(col): _*)
+    val newRows = d.join(tableSide.select(keys.map(col): _*), keys, "left_anti")
+    // partitioned appends cluster on the partition cols first — one new
+    // file per touched partition dir per batch, not one sliver per
+    // shuffle task per dir. Rows are SORTED BY KEY within each write task
+    // (partition cols lead the sort so FileFormatWriter's required
+    // partition ordering is already satisfied — otherwise it would insert
+    // its own partition-col sort and destroy the key order): every
+    // appended file then carries monotone key runs, so parquet row-group
+    // min/max statistics can skip groups under key-range predicates (the
+    // file-level key skipping a 100 TB store needs; Iceberg gets the same
+    // from sorted writes + blooms).
+    val sortCols = (partitionCols ++ keys).distinct.map(col)
+    if (partitionCols.nonEmpty)
+      // a partitioned write of zero rows creates no partition dir and no
+      // file, so a no-op replay (all keys already present — crash retry,
+      // streaming redelivery) leaves storage untouched without an
+      // emptiness probe
+      clusterByPartition(spark, newRows, partitionCols)
+        .sortWithinPartitions(sortCols: _*)
+        .write.partitionBy(partitionCols: _*)
+        .mode(SaveMode.Append).parquet(path(table))
+    else {
+      // a flat write of zero rows still writes a zero-row part file, which
+      // would perturb the snapshot fingerprint (spurious checkpoint
+      // misses) and accumulate junk files over thousands of batches: the
+      // rows are counted on their way into the write, and the files of a
+      // write that counted none are deleted again (no emptiness probe, no
+      // pin)
+      val rows = spark.sparkContext.longAccumulator
+      val counted = spark.createDataFrame(
+        newRows.rdd.mapPartitions(_.map { r => rows.add(1); r }), newRows.schema)
+      val dir = new org.apache.hadoop.fs.Path(path(table))
+      val before = walkDataFiles(fs(spark), dir).map(_.getPath).toSet
+      counted.sortWithinPartitions(sortCols: _*)
+        .write.mode(SaveMode.Append).parquet(path(table))
+      if (rows.sum == 0) {
+        walkDataFiles(fs(spark), dir).map(_.getPath).filterNot(before)
+          .foreach(fs(spark).delete(_, false))
+        return
+      }
     }
-    val newRows = d.join(tableSide, keys, "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a no-op replay (all keys already present — crash retry, streaming
-      // redelivery) must not touch storage: an empty append still writes
-      // a zero-row part file, which both perturbs the snapshot
-      // fingerprint (spurious checkpoint misses) and accumulates junk
-      // files in the listing over thousands of batches
-      if (!newRows.isEmpty) {
-        // partitioned appends cluster on the partition cols first — one
-        // new file per touched partition dir per batch, not one sliver
-        // per shuffle task per dir. Rows are SORTED BY KEY within each
-        // write task (partition cols lead the sort so FileFormatWriter's
-        // required partition ordering is already satisfied — otherwise it
-        // would insert its own partition-col sort and destroy the key
-        // order): every appended file then carries monotone key runs, so
-        // parquet row-group min/max statistics can skip groups under
-        // key-range predicates (the file-level key skipping a 100 TB
-        // store needs; Iceberg gets the same from sorted writes + blooms).
-        val sortCols = (partitionCols ++ keys).distinct.map(col)
-        val out =
-          if (partitionCols.nonEmpty)
-            clusterByPartition(spark, newRows, partitionCols)
-              .sortWithinPartitions(sortCols: _*)
-              .write.partitionBy(partitionCols: _*)
-          else newRows.sortWithinPartitions(sortCols: _*).write
-        out.mode(SaveMode.Append).parquet(path(table))
-        // keep the layout listing-healthy: partitioned appends grow one
-        // file per touched dir per batch, flat appends one per shuffle
-        // task per batch; dirs over the sliver threshold get their
-        // SUB-BOUND files merged, base files untouched (see
-        // compactSlivers) — so file counts stay bounded over long batch
-        // horizons instead of growing until every listing consumer
-        // (query planning, snapshotFp, footer stats) crawls thousands
-        // of files (production: Iceberg rewrite_data_files).
-        compactSlivers(spark, table, partitionCols, sortKeys = keys)
-      }
-    } finally { newRows.unpersist(blocking = false); () }
+    // keep the layout listing-healthy: partitioned appends grow one file
+    // per touched dir per batch, flat appends one per shuffle task per
+    // batch; dirs over the sliver threshold get their SUB-BOUND files
+    // merged, base files untouched (see compactSlivers) — so file counts
+    // stay bounded over long batch horizons instead of growing until
+    // every listing consumer (query planning, snapshotFp, footer stats)
+    // crawls thousands of files (production: Iceberg rewrite_data_files).
+    compactSlivers(spark, table, partitionCols, sortKeys = keys)
   }
 
   def overwritePartitions(spark: SparkSession, table: String, df: DataFrame,
@@ -832,6 +899,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // empty file for an empty partitioned frame) — drop every memoized
     // layout verdict for this table before the swap
     layoutMemo.removeIf(_._1 == table)
+    schemaMemo.remove(table)
     val tmp = path(table) + "__tmp"
     val out =
       if (partitionCols.nonEmpty) clusterByPartition(spark, df, partitionCols)

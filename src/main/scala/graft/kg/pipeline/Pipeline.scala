@@ -36,11 +36,14 @@ object Pipeline {
     * canonicalization) explodes into two identical rows. */
   def entityIndexRows(edges: org.apache.spark.sql.DataFrame,
       numBuckets: Int = NumBuckets): org.apache.spark.sql.DataFrame =
-    edges
-      .select(explode(array(col("subj"), col("obj"))).as("entity"),
-        col("subj"), col("pred"), col("obj"), col("label"), col("sourceChunkId"))
+    entityRows(edges)
       .dropDuplicates("entity", "subj", "pred", "obj")
       .withColumn("ebucket", pmod(hash(col("entity")), lit(numBuckets)))
+
+  /** The undeduped (entity, edge) rows of [[entityIndexRows]]. */
+  private def entityRows(edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    edges.select(explode(array(col("subj"), col("obj"))).as("entity"),
+      col("subj"), col("pred"), col("obj"), col("label"), col("sourceChunkId"))
 
   /** [[entityIndexRows]] plus each row's SOURCE-edge primary-layout
     * bucket (`sbucket = hash(subj)`) — the canonical index carries it so
@@ -198,7 +201,7 @@ final class Pipeline(
       if (config.linkMode == "lsh") () => { triples.unpersist(blocking = false); () }
       else () => ()
 
-    val mentions = Link.mentions(triples)
+    val mentions = Link.mentionNames(triples)
     val mentionVecs = Link.mentionEmbeddings(mentions, embedder)
     // incremental mode: the linkable universe = new mentions ∪ existing
     // entity names (exact duplicates collapse — names are the MERGE key)
@@ -232,13 +235,13 @@ final class Pipeline(
               // scales with the batch, not the cumulative mention
               // universe (re-signing + self-joining the universe every
               // batch was the last O(history) stage of the ingest path).
-              // Old-side vectors are recomputed inline (pure function of
-              // the name), so the batch reads NO vertex rows at all.
+              // It runs here, once, on collected batch-sized sets and
+              // returns a local Dataset; old-side vectors are recomputed
+              // from the name, so the batch reads NO vertex rows at all.
               Link.lshAliasesIncremental(
-                mentions.select($"name").distinct(), idx, embedder,
+                Link.mentionOccurrences(triples), idx, embedder,
                 config.linkThreshold, config.linkTopK,
-                maxBucket = config.lshMaxBucket,
-                broadcastSmall = !config.saltedCanonicalJoin).toDF()
+                maxBucket = config.lshMaxBucket).toDF()
             case _ =>
               // fresh store, or the first lsh batch over an exact-mode
               // store (no band index yet; materialize signs its vertex
@@ -265,12 +268,17 @@ final class Pipeline(
 
     // when the user signals the mention vocabulary outgrows broadcast
     // (saltedCanonicalJoin), the CC map joins without a broadcast hint too
-    val canonical = Canonicalize.canonicalMap(mentions, aliases,
+    // (Canonicalize.canonicalMap, solved once for both consumers below)
+    val cc = Canonicalize.connectedComponents(aliases)
+    val canonical = Canonicalize.identityComplete(mentions, cc,
       broadcastCC = !config.saltedCanonicalJoin)
     val edges = Materialize.edges(triples)
     val canonEdges =
       Materialize.canonicalEdges(edges, canonical, salted = config.saltedCanonicalJoin)
-    val vertices = Materialize.vertices(triples, mentionVecs, canonical,
+    // the vertex build maps a name the CC output lacks to itself, so it
+    // takes the linked names only — the incremental link's local result,
+    // with no mention scan to identity-complete it
+    val vertices = Materialize.vertices(triples, mentionVecs, cc,
       broadcastCanon = !config.saltedCanonicalJoin)
 
     Result(docs, chunks, embeddings, terms, triples, mentionVecs, aliases,
@@ -312,7 +320,7 @@ final class Pipeline(
     io.setFlag(spark, "batch_inflight")
     // incremental gating + full-universe link input. The band-index
     // path never reads vertex rows (linking probes the stored index and
-    // embeds candidates inline), so per-batch vertices I/O is zero. The
+    // embeds its surviving names), so per-batch vertices I/O is zero. The
     // full-join path (the first lsh batch over an exact-mode store, which
     // has no band index) scans this frame, and run() cuts its lineage
     // before any table swap (see the aliases localCheckpoint there).
@@ -325,10 +333,10 @@ final class Pipeline(
         Some(io.read(spark, "vertices"))
       else None
     // no snapshot needed: the index is append-only (appendNew), and the
-    // incremental linking probe MATERIALIZES its scans of this frame
-    // eagerly (localCheckpoint in lshAliasesIncremental) — so even the
-    // sliver compaction that may replace sub-bound index files at this
-    // batch's own append can't invalidate a lazy plan later.
+    // incremental link collects everything it reads of this frame before
+    // run() returns (lshAliasesIncremental returns a local Dataset) — so
+    // even the sliver compaction that may replace sub-bound index files
+    // at this batch's own append can't invalidate a lazy plan later.
     val bandIndexStored = io.exists(spark, "lsh_band_index")
     val bandIndex = Option.when(existing.isDefined && bandIndexStored)(
       io.read(spark, "lsh_band_index"))
@@ -365,8 +373,9 @@ final class Pipeline(
     val pinnedTriples = pin(r.triples)
     // aliases are consumed twice on incremental batches (the table MERGE
     // + the delta compaction's CC seed) — without the pin the second
-    // consumption re-executes the LSH linking join
-    val pinnedAliases = pin(r.aliases)
+    // consumption re-executes the LSH linking join. The incremental link
+    // already returns a local Dataset, which a pin would only recompute.
+    val pinnedAliases = !graft.kg.DriverSide.isLocal(r.aliases) && pin(r.aliases)
     // embeddings are deliberately NOT pinned (guide §5): they feed four
     // consumers (table append, computeThresholds, the vec-index layout,
     // the staleness probe), but at dim=768 the cache is ~1 GB at the
@@ -410,7 +419,18 @@ final class Pipeline(
     // reset, exactly as it does for the reference. appendNew falls back
     // to the full MERGE on the flat empty tables reset() leaves.
     io.appendNew(spark, "chunks", r.chunks.toDF(), Seq("chunkId"))
-    io.appendNew(spark, "chunk_embeddings", r.chunkEmbeddings.toDF(), Seq("chunkId"))
+    import graft.kg.retrieve.VectorIndex
+    // the vec index's frozen thresholds, unless a crashed predecessor
+    // forces a rebuild (see below)
+    val frozen = if (priorIncomplete) None else VectorIndex.readThresholds(spark, io)
+    // steady state (frozen thresholds): the batch's embeddings feed the
+    // table append, the skew probe and the index append — pinned once so
+    // the embed pipeline runs once per chunk. A fresh or rebuilding store
+    // leaves them unpinned (the rebuild reads the written table back).
+    val batchEmb =
+      if (frozen.isDefined) r.chunkEmbeddings.toDF().localCheckpoint()
+      else r.chunkEmbeddings.toDF()
+    io.appendNew(spark, "chunk_embeddings", batchEmb, Seq("chunkId"))
     // ANN scale path for O1 vector search: LSH sign-sketch layout of the
     // chunk embeddings under l=<table>/vbucket=<bucket> partition dirs
     // (Retrieval.vectorSearchAnn prunes to the query's probe buckets
@@ -419,7 +439,6 @@ final class Pipeline(
     // computed by an index build, persisted in the chunk_vec_meta sidecar
     // and FROZEN for later appends — re-thresholding would invalidate the
     // partitions already laid down.
-    import graft.kg.retrieve.VectorIndex
     // wholesale (re)build from the cumulative embeddings table (already
     // merged above) under fresh medians — on a fresh store that table
     // equals the batch, and reading it avoids re-running the in-flight
@@ -439,20 +458,24 @@ final class Pipeline(
         spark.createDataFrame(t.zipWithIndex.map { case (th, i) => (i, th) }.toSeq)
           .toDF("pid", "threshold"))
     }
-    VectorIndex.readThresholds(spark, io) match {
+    frozen match {
       // steady state: APPEND the batch under the frozen thresholds (the
       // bucket is a pure function of the key while they are frozen), unless
-      // the staleness probe sees a shifted embedding distribution that
-      // would re-skew occupancy (VectorIndex.StaleSkewBound)
-      case Some(t) if !priorIncomplete &&
-          !VectorIndex.occupancySkew(r.chunkEmbeddings.toDF(), embedder.dim, t)
-            .exists(_ > VectorIndex.StaleSkewBound) =>
-        io.appendNew(spark, "chunk_vec_index",
-          VectorIndex.layout(r.chunkEmbeddings.toDF(), embedder.dim, t),
-          Seq("chunkId", "l"), Seq("l", "vbucket"))
-      // no sidecar (fresh or reset store), a skewed batch, or a crashed
-      // predecessor
-      case _ => rebuildIndexWholesale()
+      // the staleness probe — read off the same layout rows — sees a
+      // shifted embedding distribution that would re-skew occupancy
+      // (VectorIndex.StaleSkewBound)
+      case Some(t) =>
+        // pinned: one scan for the probe and one delta for the append (the
+        // layout is a per-table union, and the append's anti-join would
+        // otherwise be planned once per table)
+        val rows = VectorIndex.layout(batchEmb, embedder.dim, t).localCheckpoint()
+        if (VectorIndex.layoutSkew(rows).exists(_ > VectorIndex.StaleSkewBound))
+          rebuildIndexWholesale()
+        else
+          io.appendNew(spark, "chunk_vec_index", rows,
+            Seq("chunkId", "l"), Seq("l", "vbucket"))
+      // no sidecar (fresh or reset store), or a crashed predecessor
+      case None => rebuildIndexWholesale()
     }
     // terms dedup on the MERGE key but KEEP the in-flight multiplicity as
     // a tf column — termSearch's documented score is TF summed per chunk,
@@ -574,8 +597,10 @@ final class Pipeline(
     // (the aliases it should have formed are never derived, so not even
     // a full compaction could recover them).
     if (config.linkMode == "lsh" || bandIndexStored) {
-      val batchSigs = graft.kg.stages.Link
-        .bandSignatures(r.mentionVecs.select(col("name")))
+      // signed from the mention names, not from mentionVecs: the names
+      // need no embedding
+      val batchSigs = graft.kg.stages.Link.bandSignatures(
+        graft.kg.stages.Link.mentionNames(r.triples))
       // re-sign the FULL vertex-name universe (not just the batch) when
       // the stored index cannot be trusted to cover it: absent (an
       // exact-mode store's first lsh batch) or a crashed predecessor (a
@@ -757,17 +782,27 @@ final class Pipeline(
     * vertices.canonicalName == canonical_map image — the same state the
     * full rebuild produces, maintained bucket-wise by induction.
     *
-    * Cost: broadcast-join map-only passes, each PARTITION-PRUNED to the
-    * buckets the batch's names / the map diff reach (discovery reads the
-    * changed names' entity buckets of `edge_entity_index`, their
-    * pred_index buckets, and the pred-hit subject buckets of `edges`;
-    * the rebuild reads the affected buckets plus the raw-subject buckets
-    * mapping into them) + a shuffle/write of ONLY the affected partition
-    * subset — vs the full rebuild's global shuffle + full-table rewrite;
-    * both read and write volume are bounded by the batch size plus the
-    * merged components' reach, never the store. Equivalence with
-    * [[compact]] is asserted table-for-table in CompactionSuite
-    * (broadcast and salted configs). */
+    * Cost: the batch-sized sets — the batch's edges and aliases, the
+    * touched canonical rows, the changed and affected names, the
+    * discovery legs' subjects — are collected once, and both saturation
+    * gates and every bucket list are computed from them in plain Scala
+    * (under adaptive execution each exchange is a job of its own, so a
+    * distributed pass over a handful of rows costs more than collecting
+    * it). Each collecting pass is a map-only, literal-filtered,
+    * PARTITION-PRUNED scan of the buckets the batch's names / the map
+    * diff reach (the changed names' entity buckets of
+    * `edge_entity_index`, their pred_index buckets, the pred-hit subject
+    * buckets of `edges`); the untouched map rows stay a lazy frame. The
+    * rebuild reads the affected buckets plus the raw-subject buckets
+    * mapping into them, diffs the canonical index with one aggregate,
+    * and shuffles/writes ONLY the affected partition subset —
+    * `canonical_map` included, whose changed names' buckets alone are
+    * rewritten — vs the full rebuild's global shuffle + full-table
+    * rewrite; both read and write volume are bounded by the batch size
+    * plus the merged components' reach, never the store (the whole 10-doc
+    * kgbench lsh batch runs 80 Spark jobs). Equivalence with [[compact]]
+    * is asserted table-for-table in CompactionSuite (broadcast and salted
+    * configs). */
   private def compactDelta(spark: SparkSession, io: GraphTableIO,
       batchEdges: Dataset[RelatesToEdge],
       batchAliases: Dataset[AliasPair],
@@ -782,15 +817,22 @@ final class Pipeline(
     // name hashing to a different bucket). Recover with one full
     // rebuild, which also seeds canonical_map.
     if (!io.exists(spark, "canonical_map")) { compact(spark, io, nb); return }
-    // join-strategy governance: ALL the map-side (and batch-derived-set)
-    // joins below broadcast by default; under saltedCanonicalJoin — the
-    // regime where the linked-name set outgrows executor memory — every
-    // one of them falls back to a planner-chosen shuffle join, the same
-    // trade canonicalEdges / canonicalMap / vertices already make. The
-    // delta-compaction path is exactly where the map is biggest, so a
-    // forced broadcast here would OOM first.
+    // join-strategy governance: the joins below that still read O(map) or
+    // O(store) frames broadcast by default; under saltedCanonicalJoin —
+    // the regime where the linked-name set outgrows executor memory —
+    // every one of them falls back to a planner-chosen shuffle join, the
+    // same trade canonicalEdges / canonicalMap / vertices already make.
+    // The batch-sized sets are collected and applied as literal lists,
+    // which need no hint in either regime.
     def hinted(df: DataFrame): DataFrame =
       if (config.saltedCanonicalJoin) df else broadcast(df)
+    def bucket(name: String): Int = graft.kg.DriverSide.bucketOf(name, nb)
+    def distinctOf[T](df: DataFrame): Seq[T] =
+      graft.kg.DriverSide.distinctRows(df).toSeq.map(_.get(0).asInstanceOf[T])
+    // the batch's own edges (pinned by materialize), collected once
+    val batchRows = batchEdges.toDF().select($"subj", $"pred", $"obj")
+      .as[(String, String, String)].collect()
+    val batchNames = batchRows.flatMap { case (a, p, o) => Seq(a, p, o) }.distinct
     // SATURATION PRE-GATE (r8): the batch's OWN edge names are a lower
     // bound on the affected-name set, and they are in hand before any
     // incremental-CC or discovery work — if they alone reach more than
@@ -799,32 +841,27 @@ final class Pipeline(
     // the full rebuild, so route there before paying any of it (the r8
     // gated series still showed ~4 s/batch of pre-gate CC machinery at
     // the 160-doc/nb=256 saturation point with only the post-CC gate).
-    // One count job over the pinned batch edges; both paths produce
-    // identical state (CompactionSuite gate-crossing test).
-    val batchNameBuckets = batchEdges.toDF()
-      .select(explode(array($"subj", $"pred", $"obj")).as("name"))
-      .select(pmod(hash($"name"), lit(nb)).as("b")).distinct().count()
-    if (batchNameBuckets > config.deltaSaturationFraction * nb) {
+    // Both paths produce identical state (CompactionSuite gate-crossing
+    // test).
+    if (batchNames.map(bucket).distinct.length > config.deltaSaturationFraction * nb) {
       compact(spark, io, nb); return
     }
-    val oldCC = io.read(spark, "canonical_map").select($"name", $"canonicalName")
+    val storedMap = io.read(spark, "canonical_map")
+    val oldCC = storedMap.select($"name", $"canonicalName")
     // SEEDED incremental CC: solve over {touched-component star edges ∪
     // batch alias pairs} — O(batch + touched members), not O(alias
     // history); untouched components are copied verbatim. The result is
     // provably identical to CC over the cumulative alias table (see
     // Canonicalize.incrementalComponents), which CompactionSuite asserts
-    // table-for-table against the full rebuild. localCheckpoint pins the
-    // new map (consumed several times below, and canonical_map is
-    // overwritten under its own scan otherwise).
-    val inc = Canonicalize.incrementalComponents(oldCC, batchAliases, hinted)
-    val newCC = inc.newMap.localCheckpoint()
+    // table-for-table against the full rebuild. Its touched state is
+    // local; newCC's untouched rows stay a lazy frame over canonical_map,
+    // which is rewritten last, after every reader below has run.
+    val inc = Canonicalize.incrementalComponents(oldCC, batchAliases)
+    val newCC = inc.newMap
+    val changed = inc.changedNames
     // affected = map-diff names ∪ the batch's own edge names (whose
     // canonical rows are created by this rebuild — see the Scaladoc)
-    val affectedNames = inc.changed
-      .unionByName(batchEdges.toDF()
-        .select(explode(array($"subj", $"pred", $"obj")).as("name")))
-      .distinct()
-      .localCheckpoint()
+    val affectedNames = (changed ++ batchNames).distinct
     // SATURATION GATE (r8, VERDICT r7 wrong-#1): when the batch's
     // affected names already reach most of the bucket space, every
     // "selective" pass below degenerates to ~the whole table and the
@@ -832,18 +869,16 @@ final class Pipeline(
     // and exact-diff anti-joins are paid ON TOP of a full-size rebuild —
     // the 160-doc/nb=256 series measured the delta path reading 57 MB vs
     // the full rebuild's 41 MB per batch for identical write volume.
-    // The affected-name bucket count is computable from the pinned
-    // O(batch) frame BEFORE any store read, so gating here routes a
-    // saturated batch to the existing full-rebuild branch at ~zero extra
-    // cost. Both paths produce identical state (CompactionSuite
-    // equivalences, incl. the gate-crossing test), so the gate is purely
-    // a plan choice.
-    val affectedBucketCount = affectedNames
-      .select(pmod(hash($"name"), lit(nb)).as("b")).distinct().count()
-    if (affectedBucketCount > config.deltaSaturationFraction * nb) {
+    // The affected-name bucket count is computed from the collected
+    // names BEFORE any store read, so gating here routes a saturated
+    // batch to the existing full-rebuild branch at ~zero extra cost. Both
+    // paths produce identical state (CompactionSuite equivalences, incl.
+    // the gate-crossing test), so the gate is purely a plan choice.
+    val nbuckets = affectedNames.map(bucket).distinct
+    if (nbuckets.length > config.deltaSaturationFraction * nb) {
       compact(spark, io, nb); return
     }
-    if (!affectedNames.isEmpty) {
+    if (affectedNames.nonEmpty) {
       // ---- affected-bucket discovery (canonical_edges is bucketed by
       // CANONICAL-SUBJECT hash). A stored canonical row's location is
       // hash(canonical image of its base edge's raw subj); its content is
@@ -867,75 +902,78 @@ final class Pipeline(
       //     pred-hash buckets.
       // Every leg reads only buckets the batch's names / the map diff
       // reach, so the per-batch read scales with the batch, not the store.
-      val changedNames = inc.changed.localCheckpoint()
-      val changedMark = hinted(changedNames)
-      val changedBuckets = changedNames
-        .select(pmod(hash($"name"), lit(nb)).as("b"))
-        .distinct().as[Int].collect().toSeq
-      val batchSubjs = batchEdges.toDF().select($"subj")
-      val entityLegSubjs =
-        if (changedBuckets.isEmpty) batchSubjs.limit(0)
-        else io.read(spark, "edge_entity_index")
-          .filter($"ebucket".isin(changedBuckets: _*))
-          .join(changedMark.select($"name".as("entity")),
-            Seq("entity"), "left_semi")
-          .select($"subj")
-      val predLegSubjs =
-        if (changedBuckets.isEmpty) batchSubjs.limit(0)
+      val changedBuckets = changed.map(bucket).distinct
+      val entityLegSubjs: Seq[String] =
+        if (changed.isEmpty) Nil
+        else distinctOf[String](io.read(spark, "edge_entity_index")
+          .filter($"ebucket".isin(changedBuckets: _*) && $"entity".isin(changed: _*))
+          .select($"subj"))
+      val predLegSubjs: Seq[String] =
+        if (changed.isEmpty) Nil
         else {
-          val predSbuckets = io.read(spark, "pred_index")
-            .filter($"pibucket".isin(changedBuckets: _*))
-            .join(changedMark.select($"name".as("pred")),
-              Seq("pred"), "left_semi")
-            .select($"sbucket").distinct().as[Int].collect().toSeq
-          if (predSbuckets.isEmpty) batchSubjs.limit(0)
-          else io.read(spark, "edges")
-            .filter($"sbucket".isin(predSbuckets: _*))
-            .join(changedMark.select($"name".as("pred")),
-              Seq("pred"), "left_semi")
-            .select($"subj")
+          val predSbuckets = distinctOf[Int](io.read(spark, "pred_index")
+            .filter($"pibucket".isin(changedBuckets: _*) && $"pred".isin(changed: _*))
+            .select($"sbucket"))
+          if (predSbuckets.isEmpty) Nil
+          else distinctOf[String](io.read(spark, "edges")
+            .filter($"sbucket".isin(predSbuckets: _*) && $"pred".isin(changed: _*))
+            .select($"subj"))
         }
-      val discSubjs = batchSubjs.unionByName(entityLegSubjs)
-        .unionByName(predLegSubjs).distinct()
+      val discSubjs = (batchRows.map(_._1).toSeq ++ entityLegSubjs ++ predLegSubjs).distinct
       // affected target partitions: old AND new canonical images of the
-      // discovered subjects decide where stale rows live / new rows land
-      val oldMapS = hinted(oldCC.select($"name".as("subj"), $"canonicalName".as("oc")))
-      val newMapS = hinted(newCC.select($"name".as("subj"), $"canonicalName".as("nc")))
-      val buckets = discSubjs
-        .join(oldMapS, Seq("subj"), "left").join(newMapS, Seq("subj"), "left")
-        .select(explode(array(
-          pmod(hash(coalesce($"oc", $"subj")), lit(nb)),
-          pmod(hash(coalesce($"nc", $"subj")), lit(nb)))).as("b"))
-        .distinct().as[Int].collect().toSeq // ≤ NumBuckets values
+      // discovered subjects decide where stale rows live / new rows land.
+      // A touched component's images are in hand; any other subject's
+      // image is the same under both maps, read from the untouched rows of
+      // canonical_map — in the same narrow pass that collects the
+      // untouched rows' (canonical bucket, name bucket) pairs, at most
+      // nb² of them, for the rebuild's read pruning below.
+      val others = discSubjs.filterNot(inc.touched.contains)
+      val isOther = $"name".isin(others: _*)
+      val untouchedRows = graft.kg.DriverSide.distinctRows(oldCC
+        .filter(!$"canonicalName".isin(inc.touchedCanon: _*))
+        .select(when(isOther, $"name"), when(isOther, $"canonicalName"),
+          pmod(hash($"canonicalName"), lit(nb)), pmod(hash($"name"), lit(nb))))
+      val otherImage = untouchedRows.collect {
+        case r if !r.isNullAt(0) => r.getString(0) -> r.getString(1)
+      }.toMap
+      def images(s: String): Seq[String] = inc.touched.get(s) match {
+        case Some((o, n)) => Seq(o, n)
+        case None => Seq(otherImage.getOrElse(s, s))
+      }
+      val buckets = discSubjs.flatMap(images).map(bucket).distinct // ≤ nb values
       // rebuild source, PARTITION-PRUNED: every base edge whose NEW
-      // canonical subj lands in an affected bucket. Such an edge's RAW
+      // canonical subj lands in an affected bucket (the filter on the
+      // canonicalized rows below — a canonical edge's group shares its
+      // canonical subj, so filtering after the remap keeps whole groups
+      // and needs no separate subject lookup). Such an edge's RAW
       // subj either has no map row (canonical == raw, so its primary
       // partition is itself an affected bucket) or maps through newCC —
       // and the raw-subj buckets of the map rows whose canonical image
-      // hashes into `buckets` are another ≤ NumBuckets-value aggregate
-      // over the pinned map. The canonical-bucket filter below keeps
-      // exactness; the pruning can only remove rows that filter would
-      // drop anyway.
-      val mappedRaw = newCC
-        .filter(pmod(hash($"canonicalName"), lit(nb)).isin(buckets: _*))
-        .select(pmod(hash($"name"), lit(nb)).as("b"))
-        .distinct().as[Int].collect().toSeq
-      val readBuckets = (buckets ++ mappedRaw).distinct
+      // hashes into `buckets` are another ≤ nb-value set: the touched
+      // rows' from hand, the untouched rows' from the pairs above. The
+      // canonical-bucket filter below keeps exactness; the pruning can
+      // only remove rows that filter would drop anyway.
+      val touchedRaw = inc.touched.collect {
+        case (n, (_, c)) if n != c && buckets.contains(bucket(c)) => bucket(n)
+      }
+      val untouchedRaw = untouchedRows.collect {
+        case r if buckets.contains(r.getInt(2)) => r.getInt(3)
+      }
+      val readBuckets = (buckets ++ touchedRaw ++ untouchedRaw).distinct
       val rebuildSource = io.read(spark, "edges")
         .filter($"sbucket".isin(readBuckets: _*))
         .select("subj", "pred", "obj", "label", "sourceChunkId")
-        .join(newMapS, Seq("subj"), "left")
-        .filter(pmod(hash(coalesce($"nc", $"subj")), lit(nb))
-          .isin(buckets: _*))
-        .drop("nc").as[RelatesToEdge]
-      // identity-complete the map for exactly the rebuild subset's names
-      // (canonicalEdges' salted path requires identity rows present)
-      val names = rebuildSource.toDF()
-        .select(explode(array($"subj", $"pred", $"obj")).as("name")).distinct()
-      val canonForRebuild = names
-        .join(newCC.select($"name", $"canonicalName"), Seq("name"), "left")
-        .select($"name", coalesce($"canonicalName", $"name").as("canonicalName"))
-        .as[CanonicalMapping]
+        .as[RelatesToEdge]
+      // the salted join needs the map identity-complete for exactly the
+      // rebuild subset's names; the broadcast join maps a missing name to
+      // itself already
+      val canonForRebuild =
+        if (!config.saltedCanonicalJoin) newCC.as[CanonicalMapping]
+        else rebuildSource.toDF()
+          .select(explode(array($"subj", $"pred", $"obj")).as("name")).distinct()
+          .join(newCC, Seq("name"), "left")
+          .select($"name", coalesce($"canonicalName", $"name").as("canonicalName"))
+          .as[CanonicalMapping]
       // the rebuilt buckets' OLD content, pinned BEFORE the swap deletes
       // those dirs — the index maintenance below diffs against it. A
       // partition-pruned read: O(rebuilt buckets' content), which under
@@ -948,6 +986,7 @@ final class Pipeline(
         .canonicalEdges(rebuildSource, canonForRebuild,
           salted = config.saltedCanonicalJoin)
         .toDF().withColumn("sbucket", pmod(hash($"subj"), lit(nb)))
+        .filter($"sbucket".isin(buckets: _*))
         .localCheckpoint() // pinned: consumed by the write AND the index
       io.overwritePartitions(spark, "canonical_edges", newContent,
         "sbucket", buckets)
@@ -957,46 +996,49 @@ final class Pipeline(
       // ebucket the rebuilt content reaches amplified the index write to
       // ~the full table whenever the rebuilt rows' entities saturated the
       // bucket space (measured: 9.3 of 9.3 MB for a 10-doc batch at 256
-      // buckets). Diffing old vs new index images of the rebuilt buckets
-      // costs two anti-joins over O(batch reach) rows and shrinks the
-      // rewrite to the ebuckets of rows that ACTUALLY changed.
+      // buckets). The diff of the old vs new index images of the rebuilt
+      // buckets is one aggregate over O(batch reach) rows; its O(changed
+      // rows) result is collected, and the rewrite shrinks to the
+      // ebuckets of rows that ACTUALLY changed.
       // Production analogue: Iceberg equality deletes (merge-on-read).
       // Invariant: index == canonicalIndexRows(canonical_edges),
       // asserted in CanonicalQuerySuite.
       val rowCols = Seq("entity", "subj", "pred", "obj", "label",
         "sourceChunkId")
-      val oldIdx = Pipeline.canonicalIndexRows(oldContent, nb)
-      val newIdx = Pipeline.canonicalIndexRows(
-        newContent.select("subj", "pred", "obj", "label", "sourceChunkId"),
-        nb)
+      val idxCols = rowCols ++ Seq("ebucket", "sbucket")
       // rows are unique in rowCols within each side (content is keyed
-      // on (subj,pred,obj)), and a diff row cannot collide with an
-      // untouched bucket's row (same subj ⇒ same sbucket ⇒ that bucket
-      // was rebuilt), so drop/add is an exact set update
-      val dropRows = oldIdx.join(hinted(newIdx), rowCols, "left_anti")
-        .localCheckpoint()
-      val addRows = newIdx.join(hinted(oldIdx), rowCols, "left_anti")
-        .localCheckpoint()
-      val ebuckets = (dropRows.select($"ebucket")
-        .unionByName(addRows.select($"ebucket"))
-        .distinct().as[Int].collect().toSeq)
+      // on (subj,pred,obj)) up to a self-edge's two identical entity rows,
+      // so a row's summed side weight is negative (dropped), positive
+      // (added) or 0 (kept) — one aggregate, with no per-side dedup; a
+      // diff row cannot collide with an untouched bucket's row (same
+      // subj ⇒ same sbucket ⇒ that bucket was rebuilt), so drop/add is an
+      // exact set update
+      def weighted(content: DataFrame, w: Int): DataFrame =
+        Pipeline.entityRows(content).withColumn("d", lit(w))
+      val diffRows = weighted(oldContent, -1)
+        .unionByName(weighted(newContent, 1))
+        .groupBy(rowCols.map(col): _*).agg(sum($"d").as("d"))
+        .filter($"d" =!= 0)
+        .withColumn("ebucket", pmod(hash($"entity"), lit(nb)))
+        .withColumn("sbucket", pmod(hash($"subj"), lit(nb)))
+      val diff = diffRows.collect()
+      def local(rows: Array[org.apache.spark.sql.Row]): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), diffRows.schema)
+      val (addRows, dropRows) = diff.partition(_.getAs[Long]("d") > 0)
+      val ebuckets = diff.map(_.getAs[Int]("ebucket")).distinct.toSeq
       if (ebuckets.nonEmpty) {
         val carried = io.read(spark, "canonical_edge_entity_index")
           .filter($"ebucket".isin(ebuckets: _*)) // partition-pruned
-          .join(hinted(dropRows.select(rowCols.map(col): _*)),
-            rowCols, "left_anti")
-          .select("entity", "subj", "pred", "obj", "label",
-            "sourceChunkId", "ebucket", "sbucket")
+          .join(local(dropRows).select(rowCols.map(col): _*), rowCols, "left_anti")
+          .select(idxCols.map(col): _*)
         io.overwritePartitions(spark, "canonical_edge_entity_index",
-          carried.unionByName(addRows), "ebucket", ebuckets)
+          carried.unionByName(local(addRows).select(idxCols.map(col): _*)),
+          "ebucket", ebuckets)
       } // empty diff: the rebuild regenerated identical images — the
         // index is untouched on storage
       // vertex pointer refresh: only partitions holding an affected name;
       // EVERY row in them gets its pointer regenerated from the new map
       // (idempotent for unaffected rows — their image is unchanged there)
-      val nbuckets = affectedNames
-        .select(pmod(hash($"name"), lit(nb)).as("b"))
-        .distinct().as[Int].collect().toSeq
       val refreshed = io.read(spark, "vertices")
         .filter($"nbucket".isin(nbuckets: _*)) // partition-pruned read
         .drop("canonicalName")
@@ -1006,8 +1048,18 @@ final class Pipeline(
           $"vec", $"tripletPart", $"nbucket")
       io.overwritePartitions(spark, "vertices", refreshed, "nbucket", nbuckets)
     }
-    io.overwrite(spark, "canonical_map",
-      Pipeline.canonicalMapLayout(newCC.select($"name", $"canonicalName"), nb),
-      Seq("cbucket"))
+    // canonical_map: components only merge, so a row can change only at a
+    // changed name, and only the cbuckets of the changed names are
+    // rewritten. An empty map is laid flat (reset leaves a flat empty
+    // table, and an empty partitioned write is re-laid unpartitioned), so
+    // it takes the whole overwrite.
+    val layout = Pipeline.canonicalMapLayout(newCC.select($"name", $"canonicalName"), nb)
+    if (!storedMap.inputFiles.exists(_.contains("/cbucket=")))
+      io.overwrite(spark, "canonical_map", layout, Seq("cbucket"))
+    else if (changed.nonEmpty) {
+      val cbuckets = changed.map(bucket).distinct
+      io.overwritePartitions(spark, "canonical_map",
+        layout.filter($"cbucket".isin(cbuckets: _*)), "cbucket", cbuckets)
+    }
   }
 }

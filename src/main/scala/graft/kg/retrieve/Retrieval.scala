@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Query-side retrieval (reference `core/retrieval.py`), re-expressed as
@@ -297,8 +296,7 @@ final class Retrieval(embedder: Embedder, config: GraftConfig = GraftConfig())
     * doubles by SQL comparison (-0.0 == 0.0, NaN largest), strings by
     * UTF-8 bytes (not Java's UTF-16 `compareTo`). */
   private val scoreDesc: Ordering[Double] = (a, b) => SQLOrderingUtil.compareDoubles(b, a)
-  private val utf8: Ordering[String] =
-    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  private val utf8: Ordering[String] = graft.kg.DriverSide.utf8Ordering
   /** (chunkId, score) by (score desc, chunkId). */
   private val ranked: Ordering[(String, Double)] =
     Ordering.by[(String, Double), (Double, String)](x => (x._2, x._1))(

@@ -76,8 +76,8 @@ object VectorIndex {
   def readThresholds(spark: org.apache.spark.sql.SparkSession,
       io: graft.kg.pipeline.GraphTableIO): Option[Array[Double]] =
     if (!io.exists(spark, "chunk_vec_meta")) None
-    else Some(io.read(spark, "chunk_vec_meta").orderBy("pid")
-      .collect().map(_.getAs[Double]("threshold"))).filter(_.nonEmpty)
+    else Some(io.read(spark, "chunk_vec_meta").collect()
+      .sortBy(_.getAs[Int]("pid")).map(_.getAs[Double]("threshold"))).filter(_.nonEmpty)
 
   /** Per-plane dataset-median projection thresholds, in ONE aggregation
     * pass over the embeddings (24 exact-percentile aggs on the projection
@@ -120,18 +120,27 @@ object VectorIndex {
     * under `thresholds`; None when the frame holds fewer than `minRows`
     * rows (too noisy to act on). */
   def occupancySkew(embeddings: DataFrame, dim: Int,
-      thresholds: Array[Double], minRows: Long = StaleMinRows): Option[Double] = {
-    val aggs = (0 until NumPlanes).map { pid =>
-      avg(when(dot_product(col("vec"), typedLit(planeWeights(pid, dim)))
-        > thresholds(pid), 1.0).otherwise(0.0)).as(s"f_$pid")
-    }
-    val row = embeddings
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"), aggs: _*)
-      .head()
-    if (row.getLong(0) < minRows) None
-    else Some((0 until NumPlanes)
-      .map(i => math.abs(row.getDouble(i + 1) - 0.5)).max)
+      thresholds: Array[Double], minRows: Long = StaleMinRows): Option[Double] =
+    layoutSkew(layout(embeddings, dim, thresholds), minRows)
+
+  /** [[occupancySkew]] read off a batch's [[layout]] rows: bit p of a
+    * row's `vbucket` in table l IS plane l·K+p's positive-side test, so
+    * one map-only pass counting rows per (l, vbucket) yields every
+    * plane's fraction — the ingest computes the probe over the same rows
+    * it then appends. */
+  def layoutSkew(layoutRows: DataFrame, minRows: Long = StaleMinRows): Option[Double] = {
+    val counts = layoutRows.select(col("l"), col("vbucket")).rdd.mapPartitions { it =>
+      val m = scala.collection.mutable.Map.empty[(Int, Int), Long]
+      it.foreach(r => m((r.getInt(0), r.getInt(1))) = m.getOrElse((r.getInt(0), r.getInt(1)), 0L) + 1)
+      m.iterator
+    }.collect()
+    val n = counts.collect { case ((0, _), c) => c }.sum
+    if (n < minRows) None
+    else Some((0 until NumPlanes).map { pid =>
+      val (l, p) = (pid / BitsPerTable, pid % BitsPerTable)
+      val ones = counts.collect { case ((`l`, vb), c) if (vb & (1 << p)) != 0 => c }.sum
+      math.abs(ones.toDouble / n.toDouble - 0.5)
+    }.max)
   }
 
   /** Sign-sketch bucket of `vCol` for hash table `table`: bit p set iff

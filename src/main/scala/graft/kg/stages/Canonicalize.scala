@@ -56,6 +56,32 @@ object Canonicalize {
       .distinct()
   }
 
+  /** Driver-side union-find over an edge list: every non-minimum member
+    * of each component mapped to the component minimum. */
+  private[kg] def solveLocal(edges: Seq[(String, String)]): Seq[CanonicalMapping] = {
+    val parent = mutable.Map.empty[String, String]
+    // iterative find (walk to root, second pass compresses): union-by-min
+    // can build O(n) parent chains on adversarial edge orders (e.g. long
+    // near-duplicate version chains), which would blow the JVM stack in
+    // a recursive find at the 2^20-edge threshold
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.groupBy(find).toSeq
+      .flatMap { case (_, ns) =>
+        val m = ns.min
+        ns.collect { case n if n != m => CanonicalMapping(n, m) }
+      }
+  }
+
   /** name → canonicalName for every name appearing in `aliases`
     * (non-identity mappings only appear for linked names; [[canonicalMap]]
     * adds the identity rows).
@@ -117,6 +143,14 @@ object Canonicalize {
     def dropCheckpointDirs(dirs: Set[String]): Unit =
       dirs.foreach(d => ckptFs.delete(new Path(ckptBase.get, d), true))
 
+    // a local input (the incremental link's collected pairs) is solved
+    // on the driver as it stands: no persist, no probe job
+    if (graft.kg.DriverSide.isLocal(aliases)) {
+      val pairs = aliases.collect().collect { case p if p.a != p.b => (p.a, p.b) }
+      if (pairs.length <= localSolveThreshold)
+        return spark.createDataset(solveLocal(pairs.toSeq))
+    }
+
     val distinctEdges = aliases.select(col("a").as("u"), col("b").as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
@@ -132,30 +166,9 @@ object Canonicalize {
     // cheap size probe: take threshold+1 rows; under the cap → local solve
     val head = distinctEdges.limit((localSolveThreshold + 1).toInt).collect()
     if (head.length <= localSolveThreshold) {
-      val parent = mutable.Map.empty[String, String]
-      // iterative find (walk to root, second pass compresses): union-by-min
-      // can build O(n) parent chains on adversarial edge orders (e.g. long
-      // near-duplicate version chains), which would blow the JVM stack in
-      // a recursive find at the 2^20-edge threshold
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      head.foreach { r =>
-        val (a, b) = (r.getString(0), r.getString(1))
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val nodes = head.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct
-      val mapping = nodes.groupBy(find).toSeq.flatMap { case (_, ns) =>
-        val m = ns.min
-        ns.collect { case n if n != m => CanonicalMapping(n, m) }
-      }
       distinctEdges.unpersist(blocking = false) // fully consumed by the probe
-      return spark.createDataset(mapping)
+      return spark.createDataset(
+        solveLocal(head.toSeq.map(r => (r.getString(0), r.getString(1)))))
     }
 
     var (edges, edgesCkpt) = barrierTracked(distinctEdges)
@@ -206,13 +219,21 @@ object Canonicalize {
   }
 
   /** Result of an incremental CC solve: the new canonical map (all
-    * non-identity rows), the names whose mapping changed vs the old map,
-    * and (for observability/tests) the seed edge set the solve actually
-    * ran over — O(batch + touched-component members), not O(history). */
+    * non-identity rows — the untouched rows a lazy frame over the old
+    * map, the touched components' rows local), the names whose mapping
+    * changed vs the old map, and (for observability/tests) the seed edge
+    * set the solve actually ran over — O(batch + touched-component
+    * members), not O(history). The local fields hold the same touched
+    * state for callers that finish the work on the driver: `touched` maps
+    * every seed node to its (old, new) canonical name, and `touchedCanon`
+    * lists the old canonical names the untouched rows are cut by. */
   final case class IncrementalCC(
       newMap: DataFrame, // (name, canonicalName), non-identity
       changed: DataFrame, // (name)
-      seed: Dataset[AliasPair])
+      seed: Dataset[AliasPair],
+      changedNames: Seq[String],
+      touched: Map[String, (String, String)],
+      touchedCanon: Seq[String])
 
   /** Incremental connected components over a growing alias graph — the
     * per-batch form of [[connectedComponents]] (reference anchor: the
@@ -237,48 +258,46 @@ object Canonicalize {
     *  3. newMap = CC(seed) ∪ untouched old rows; changed = diff of the
     *     touched rows vs CC(seed) — both O(touched), small.
     *
-    * The old-map scans stay map-only when `smallHint = broadcast` (the
-    * probe sets are batch-bounded); pass identity for the regime where
-    * even batch-derived sets should not be broadcast — the joins then
-    * fall to planner-chosen shuffles, the same trade every other
-    * canonical-map join makes under `saltedCanonicalJoin`. */
+    * Every set but the untouched rows is batch-sized, so it is collected:
+    * the pairs, then the old rows of the batch's names and of their
+    * components in one or two filtered scans of the old map (literal
+    * lists — no join, hence no broadcast), then the seed is solved with
+    * [[connectedComponents]]' size-adaptive split (a driver union-find up
+    * to its threshold) and the diff is taken in plain Scala. */
   def incrementalComponents(
       oldMap: DataFrame, // (name, canonicalName), non-identity rows
-      newPairs: Dataset[AliasPair],
-      smallHint: DataFrame => DataFrame = broadcast): IncrementalCC = {
+      newPairs: Dataset[AliasPair]): IncrementalCC = {
     val spark = oldMap.sparkSession
     import spark.implicits._
     val old = oldMap.select(col("name"), col("canonicalName"))
-    val pairs = newPairs.select(col("a"), col("b")).where(col("a") =!= col("b"))
-    // pinned: each is consumed by 2-3 downstream joins, and re-running
-    // `pairs` would re-execute the batch's linking DAG
-    val batchNames = pairs.select(explode(array(col("a"), col("b"))).as("name"))
-      .distinct().localCheckpoint() // O(batch)
-    val hit = old.join(smallHint(batchNames), Seq("name"), "left_semi")
-      .localCheckpoint() // O(batch): old rows of the batch's names
-    val touchedCanon = hit.select(col("canonicalName").as("c"))
-      .unionByName(batchNames.join(hit.select(col("name")), Seq("name"), "left_anti")
-        .select(col("name").as("c"))) // unmapped batch names: canonical = self
-      .distinct().localCheckpoint() // O(batch) component ids
-    val touchedKey = touchedCanon.select(col("c").as("canonicalName"))
-    val touchedRows = old
-      .join(smallHint(touchedKey), Seq("canonicalName"), "left_semi")
-      .localCheckpoint() // O(touched-component members)
-    val seed = touchedRows
-      .select(col("canonicalName").as("a"), col("name").as("b"),
-        lit(1.0).as("score")).as[AliasPair]
-      .unionByName(pairs.withColumn("score", lit(1.0)).as[AliasPair])
-    val solved = connectedComponents(seed).toDF().localCheckpoint()
-    val untouched = old
-      .join(smallHint(touchedKey), Seq("canonicalName"), "left_anti")
-      .select(col("name"), col("canonicalName"))
-    val newMap = untouched.unionByName(solved.select(col("name"), col("canonicalName")))
-    val changed = touchedRows.select(col("name"), col("canonicalName").as("oldC"))
-      .join(solved.select(col("name"), col("canonicalName").as("newC")),
-        Seq("name"), "full_outer")
-      .filter(!(coalesce(col("oldC"), col("name")) <=> coalesce(col("newC"), col("name"))))
-      .select(col("name"))
-    IncrementalCC(newMap, changed, seed)
+    def rowsWhere(c: org.apache.spark.sql.Column): Seq[(String, String)] =
+      old.filter(c).as[(String, String)].collect().toSeq
+    val pairs = newPairs.collect().collect { case p if p.a != p.b => (p.a, p.b) }.toSeq
+    val batchNames = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+    // old rows of the batch's names, and of components whose canonical is
+    // a batch name; a second scan only for the other touched canonicals
+    val near =
+      if (batchNames.isEmpty) Nil
+      else rowsWhere(col("name").isin(batchNames: _*) ||
+        col("canonicalName").isin(batchNames: _*))
+    val nearOld = near.toMap
+    val touchedCanon = batchNames.map(n => nearOld.getOrElse(n, n)).distinct
+    val farCanon = touchedCanon.filterNot(batchNames.toSet)
+    val touchedRows = (near ++
+      (if (farCanon.isEmpty) Nil else rowsWhere(col("canonicalName").isin(farCanon: _*))))
+      .distinct
+    val seedPairs = touchedRows.map { case (n, c) => (c, n) } ++ pairs
+    val seed = seedPairs.map { case (a, b) => AliasPair(a, b, 1.0) }
+    val solved = connectedComponents(spark.createDataset(seed)).collect()
+      .map(m => m.name -> m.canonicalName).toMap
+    val oldOf = touchedRows.toMap
+    val touched = seedPairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .map(n => n -> (oldOf.getOrElse(n, n), solved.getOrElse(n, n))).toMap
+    val changedNames = touched.collect { case (n, (o, c)) if o != c => n }.toSeq
+    val untouched = old.filter(!col("canonicalName").isin(touchedCanon: _*))
+    val newMap = untouched.unionByName(solved.toSeq.toDF("name", "canonicalName"))
+    IncrementalCC(newMap, changedNames.toDF("name"), spark.createDataset(seed),
+      changedNames, touched, touchedCanon)
   }
 
   /** Full canonical map over a mention set: identity for unlinked names.
@@ -293,11 +312,17 @@ object Canonicalize {
   def canonicalMap(
       mentionNames: DataFrame, // (name)
       aliases: Dataset[AliasPair],
-      broadcastCC: Boolean = true): Dataset[CanonicalMapping] = {
+      broadcastCC: Boolean = true): Dataset[CanonicalMapping] =
+    identityComplete(mentionNames, connectedComponents(aliases), broadcastCC)
+
+  /** [[canonicalMap]] over an already-solved CC output `cc`. */
+  private[kg] def identityComplete(
+      mentionNames: DataFrame, // (name)
+      cc: Dataset[CanonicalMapping],
+      broadcastCC: Boolean): Dataset[CanonicalMapping] = {
     val spark = mentionNames.sparkSession
     import spark.implicits._
-    val cc = connectedComponents(aliases).toDF()
-    val ccSide = if (broadcastCC) broadcast(cc) else cc
+    val ccSide = if (broadcastCC) broadcast(cc.toDF()) else cc.toDF()
     mentionNames.select(col("name")).distinct()
       .join(ccSide, Seq("name"), "left")
       .select(col("name"), coalesce(col("canonicalName"), col("name")).as("canonicalName"))

@@ -5,6 +5,9 @@ import graft.kg.embed.Embedder
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+
+import scala.collection.mutable
 
 /** Entity linking (reference `core/triplets.py:252-343`).
   *
@@ -50,6 +53,19 @@ object Link {
       .distinct()
   }
 
+  /** Distinct lowercased mention names (subjects, predicates and
+    * objects): [[mentions]] without the roles, in one shuffle on the
+    * name — what embedding and the canonical map consume. */
+  def mentionNames(triples: Dataset[Triple]): DataFrame =
+    mentionOccurrences(triples).distinct()
+
+  /** One `(name)` row per lowercased subject, predicate and object
+    * occurrence, not deduped (the incremental link dedupes on the
+    * driver). */
+  def mentionOccurrences(triples: Dataset[Triple]): DataFrame =
+    triples.select(explode(array(lower(col("subj")), lower(col("pred")),
+      lower(col("obj")))).as("name"))
+
   /** Embed each distinct mention name exactly once (vs the reference's
     * 3 embeds per triplet occurrence, `triplets.py:234-236`). */
   def mentionEmbeddings(mentionNames: DataFrame, embedder: Embedder): DataFrame = {
@@ -93,6 +109,12 @@ object Link {
     * replaces recomputing the whole universe's signatures every batch. */
   def bandSignatures(names: DataFrame, // (name)
       numBands: Int = 8): DataFrame =
+    signed(names, numBands).select(col("name"), col("band"), col("mh"))
+
+  /** [[bandSignatures]] rows that also carry the name's shingle set
+    * `sh` — the one Spark expression both the signatures and the
+    * Jaccard cut are taken from. */
+  private def signed(names: DataFrame, numBands: Int): DataFrame =
     names.select(col("name"))
       .withColumn("s0", sentinelWrapped(col("name")))
       .withColumn("sh", shinglesExpr)
@@ -100,32 +122,46 @@ object Link {
         explode(sequence(lit(0), lit(numBands - 1))).as("band"))
       .withColumn("mh",
         expr("array_min(transform(sh, g -> md5(concat(cast(band AS string), '|', g))))"))
-      .select(col("name"), col("band"), col("mh"))
 
   /** Incremental J1: link a batch's NEW mentions against the cumulative
     * graph by PROBING the stored band index instead of re-signing and
     * self-joining the whole universe (the reference's shape — each
     * triplet queries the cumulative vector index, `triplets.py:252-343`).
+    * Every set it touches is batch-sized, so it runs on the driver over
+    * collected rows in three Spark jobs, and it runs ONCE: the result is a
+    * local Dataset, which later consumers (the CC solve, the aliases
+    * MERGE, delta compaction) read without re-executing the link.
     *
-    *  - new×old candidates: batch signatures equi-joined against the
-    *    stored index on the band key — the batch side is broadcast
-    *    (batch-bounded) unless `broadcastSmall = false`, so the stored
-    *    index is scanned map-only, never shuffled. The band index signs
-    *    EVERY mention ever processed (subjects, predicates AND objects),
-    *    so the old-side universe is the full cumulative mention set — a
-    *    prior-batch name that only ever appeared as a predicate links
-    *    exactly like batch mode would link it;
-    *  - new×new candidates: the batch's own signature self-join;
-    *  - the band-bucket cap counts stored + batch members per bucket on
-    *    BOTH legs — a bucket degenerate in the cumulative universe drops
-    *    its batch-internal pairs too, matching what one-shot linking
-    *    over the union would do;
-    *  - Jaccard + exact-cosine re-score + top-`linkTopK` per probe run
-    *    on the union, identical to batch mode. Candidate vectors are a
-    *    pure function of the name (deterministic hash embedder), so they
-    *    are computed INLINE per candidate pair — the old side needs no
-    *    vertex/vector table I/O at all; per-batch linking reads the band
-    *    index and nothing else of the store.
+    *  1. the batch's `(name, band, mh, sh)` rows are collected (the
+    *     shingles and minhashes come from the same Spark expressions as
+    *     the stored index's rows, so blocking is identical by
+    *     construction);
+    *  2. the stored index is read in one map-only pass restricted to the
+    *     batch's probed keys: per key, its member count and at most
+    *     `maxBucket + 1` member names with their shingles — a degenerate
+    *     bucket is never collected whole. The band index signs EVERY
+    *     mention ever processed (subjects, predicates AND objects), so the
+    *     old-side universe is the full cumulative mention set — a
+    *     prior-batch name that only ever appeared as a predicate links
+    *     exactly like batch mode would link it;
+    *  3. on the driver: the bucket cap counts stored + batch members per
+    *     key (a bucket degenerate in the cumulative universe drops its
+    *     batch-internal pairs too, matching one-shot linking over the
+    *     union); candidates are the pairs of a surviving key's members
+    *     with at least one batch member (new×old and new×new); the exact
+    *     shingle-Jaccard cut then runs before any embedding;
+    *  4. each distinct surviving name is embedded ONCE, on the executors
+    *     (vectors are a pure function of the name — the old side needs no
+    *     vertex/vector table I/O at all);
+    *  5. on the driver: the cosine (`DotProduct`'s arithmetic — float
+    *     products widened to double, summed left to right — so the scores
+    *     are bit-identical to batch mode's), the threshold, and the
+    *     symmetrized top-`linkTopK` per probe in Spark's (score desc,
+    *     UTF-8 name) order.
+    *
+    * Band-index safety: both index reads are collected before this
+    * returns, so the sliver compaction this batch's own band-index append
+    * may run cannot invalidate a lazy plan over replaced files.
     *
     * Accumulation semantics (documented drift from one-shot linking):
     * the per-probe top-K caps THIS BATCH's candidates; a name processed
@@ -133,99 +169,96 @@ object Link {
     * the cumulative table — the same accumulation the reference's
     * per-triplet top-10 MERGEs produce. */
   def lshAliasesIncremental(
-      newNames: DataFrame, // (name) — the batch's distinct mentions
+      newNames: DataFrame, // (name) — the batch's mentions
       storedSigs: DataFrame, // (name, band, mh) — lsh_band_index
       embedder: Embedder,
       threshold: Double,
       linkTopK: Int,
       jaccardDistanceCap: Double = 0.7,
       numBands: Int = 8,
-      maxBucket: Int = 256,
-      broadcastSmall: Boolean = true): Dataset[AliasPair] = {
+      maxBucket: Int = 256): Dataset[AliasPair] = {
     val spark = newNames.sparkSession
     import spark.implicits._
-    def small(df: DataFrame): DataFrame =
-      if (broadcastSmall) broadcast(df) else df
-
-    val newSigs = bandSignatures(newNames.select($"name"), numBands)
-      .localCheckpoint() // consumed by the cap count AND both legs
-    // only the buckets the BATCH probes matter — restrict the stored
-    // index to them first (map-only semi-join against the broadcast
-    // batch keys), so the cap count and the candidate join both touch
-    // O(batch-probed members), never the cumulative index's key space
-    val probedKeys = newSigs.select($"band", $"mh").distinct()
-    val storedProbed = storedSigs.select($"name", $"band", $"mh")
-      .join(small(probedKeys), Seq("band", "mh"), "left_semi")
-      .localCheckpoint() // consumed by the cap count AND the probe join
-    // deterministic bucket cap over the union population (stored ∪ new,
-    // (name, band) deduped — a re-ingested name sits in both sides)
-    val badBuckets = storedProbed
-      .unionByName(newSigs.select($"name", $"band", $"mh"))
-      .dropDuplicates("name", "band")
-      .groupBy($"band", $"mh").agg(count(lit(1)).as("bsz"))
-      .filter($"bsz" > maxBucket)
-      .select($"band", $"mh") // degenerate buckets only — tiny
-      .localCheckpoint() // consumed by both legs' anti-joins
-    def dropBad(df: DataFrame, side: String): DataFrame =
-      df.join(small(badBuckets.as("k")),
-        col(s"$side.band") === col("k.band") && col(s"$side.mh") === col("k.mh"),
-        "left_anti")
-    // new×old candidate names: probe the (pre-restricted) stored rows
-    // with the batch's signatures — map-only when the batch side
-    // broadcasts; degenerate buckets dropped whole, as in batch mode
-    val nxo = dropBad(storedProbed.as("o")
-      .join(small(newSigs.as("n")),
-        col("o.band") === col("n.band") && col("o.mh") === col("n.mh") &&
-          col("o.name") =!= col("n.name")), "o")
-      .select(least(col("o.name"), col("n.name")).as("a"),
-        greatest(col("o.name"), col("n.name")).as("b"))
-    // new×new candidates from the SAME signature set under the SAME
-    // union-counted cap: a bucket whose cumulative membership is
-    // degenerate must drop its batch-internal pairs too — counting only
-    // the batch's members (as delegating to batch-mode lshAliases over
-    // the batch alone would) diverges from one-shot linking over the
-    // union on exactly the adversarial buckets the cap exists for
-    val nxn = dropBad(newSigs.as("x")
-      .join(newSigs.as("y"),
-        col("x.band") === col("y.band") && col("x.mh") === col("y.mh") &&
-          col("x.name") < col("y.name")), "x")
-      .select(col("x.name").as("a"), col("y.name").as("b"))
-    val cand = nxo.unionByName(nxn).dropDuplicates("a", "b")
-    // vectors are a PURE function of the name — recompute inline for the
-    // O(candidates) pairs instead of joining any stored vector table
-    val emb = embedder
-    val withVecs = cand
-      .select($"a".as("_1"), $"b".as("_2")).as[(String, String)]
-      .mapPartitions { it =>
-        it.map { case (a, b) => (a, b, emb.embedPassage(a), emb.embedPassage(b)) }
+    type Key = (Int, String) // (band, mh)
+    val shingles = mutable.Map.empty[String, Array[String]]
+    val batchKeys = mutable.Map.empty[Key, mutable.Set[String]]
+    // per-task dedup first: the input may hold each name many times
+    val distinctNames = newNames.select($"name").as[String]
+      .mapPartitions(_.toSet.iterator).toDF("name")
+    signed(distinctNames, numBands)
+      .filter($"mh".isNotNull)
+      .select($"name", $"band", $"mh", $"sh").as[(String, Int, String, Array[String])]
+      .collect().foreach { case (n, b, m, sh) =>
+        shingles(n) = sh
+        batchKeys.getOrElseUpdate((b, m), mutable.Set.empty) += n
       }
-      .toDF("a", "b", "va", "vb")
-    def withShingles(df: DataFrame, key: String, sh: String): DataFrame =
-      df.withColumn("s0", sentinelWrapped(col(key)))
-        .withColumn(sh, shinglesExpr)
-        .drop("s0")
-    val scored = withShingles(withShingles(withVecs, "a", "sha"), "b", "shb")
-      .withColumn("inter", size(array_intersect($"sha", $"shb")).cast("double"))
-      .withColumn("jd",
-        lit(1.0) - $"inter" /
-          (size($"sha").cast("double") + size($"shb").cast("double") - $"inter"))
-      .filter($"jd" <= jaccardDistanceCap)
-      .withColumn("score", graft.functions.VectorFunctions.dot_product($"va", $"vb"))
-      .filter($"score" >= threshold)
-      .select($"a", $"b", $"score")
-    // top-K per probe over this batch's candidates, both directions.
-    // Symmetrize with a per-row explode, NOT scored ∪ scored.swap: the
-    // union form executes the whole candidate-join/re-score subtree a
-    // second time for the swapped branch (Catalyst does not dedupe common
-    // subtrees across union legs) — measured as a full re-run of the
-    // linking join per call (guide §2.4 / r8). One exploded pass emits
-    // the identical symmetric row set.
-    val sym = symmetrized(scored)
-    val w = Window.partitionBy($"a").orderBy($"score".desc, $"b")
-    sym.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= linkTopK)
-      .select($"a", $"b", $"score")
-      .as[AliasPair]
+    if (batchKeys.isEmpty) return spark.emptyDataset[AliasPair]
+
+    // per probed key: stored member count and ≤ maxBucket + 1 members. A
+    // key's count is exact (summed over tasks); when it is ≤ maxBucket no
+    // task truncated its list, so the merged list is the whole bucket.
+    // The index holds one row per (name, band) (appendNew dedupes on that
+    // key), so a key's row count is its member count.
+    val probed = batchKeys.keySet.toSet
+    val keep = maxBucket + 1
+    val stored = mutable.Map.empty[Key, (Long, mutable.Map[String, Array[String]])]
+    storedSigs.select($"name", $"band", $"mh")
+      .filter($"mh".isin(probed.map(_._2).toSeq: _*))
+      .withColumn("s0", sentinelWrapped($"name"))
+      .withColumn("sh", shinglesExpr)
+      .select($"band", $"mh", $"name", $"sh").as[(Int, String, String, Array[String])]
+      .mapPartitions { it =>
+        val acc = mutable.Map.empty[Key, (Long, List[(String, Array[String])])]
+        it.foreach { case (b, m, n, sh) =>
+          if (probed.contains((b, m))) {
+            val (c, ms) = acc.getOrElse((b, m), (0L, Nil))
+            acc((b, m)) = (c + 1, if (c < keep) (n, sh) :: ms else ms)
+          }
+        }
+        acc.iterator.map { case ((b, m), (c, ms)) => (b, m, c, ms) }
+      }
+      .collect().foreach { case (b, m, c, ms) =>
+        val (c0, ms0) = stored.getOrElseUpdate((b, m), (0L, mutable.Map.empty))
+        ms.foreach { case (n, sh) => ms0(n) = sh; shingles(n) = sh }
+        stored((b, m)) = (c0 + c, ms0)
+      }
+
+    // candidates under the union-counted cap, then the exact Jaccard cut
+    val utf8 = graft.kg.DriverSide.utf8Ordering
+    val cand = mutable.Set.empty[(String, String)]
+    batchKeys.foreach { case (k, bn) =>
+      val (sc, sn) = stored.getOrElse(k, (0L, mutable.Map.empty[String, Array[String]]))
+      val members = sn.keySet ++ bn
+      if (sc <= maxBucket && members.size <= maxBucket)
+        for (p <- bn; q <- members if p != q)
+          cand += (if (utf8.lt(p, q)) (p, q) else (q, p))
+    }
+    def jaccardDistance(a: Array[String], b: Array[String]): Double = {
+      val bs = b.toSet
+      val inter = a.count(bs).toDouble // shingle arrays are distinct
+      1.0 - inter / (a.length.toDouble + b.length.toDouble - inter)
+    }
+    val close = cand.toSeq.filter { case (a, b) =>
+      jaccardDistance(shingles(a), shingles(b)) <= jaccardDistanceCap
+    }
+    if (close.isEmpty) return spark.emptyDataset[AliasPair]
+
+    val names = close.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val emb = embedder
+    val vecs = spark.sparkContext
+      .parallelize(names, math.min(names.size, spark.sparkContext.defaultParallelism))
+      .map(n => n -> emb.embedPassage(n)).collect().toMap
+    val scored = close.flatMap { case (a, b) =>
+      val score = Embedder.dot(vecs(a), vecs(b))
+      if (score >= threshold) Seq(AliasPair(a, b, score), AliasPair(b, a, score))
+      else Nil
+    }
+    val order: Ordering[AliasPair] = (x, y) => {
+      val bySc = SQLOrderingUtil.compareDoubles(y.score, x.score)
+      if (bySc != 0) bySc else utf8.compare(x.b, y.b)
+    }
+    spark.createDataset(
+      scored.groupBy(_.a).values.flatMap(_.sorted(order).take(linkTopK)).toSeq)
   }
 
   /** (a, b, score) → both directions of every row in ONE map-side pass

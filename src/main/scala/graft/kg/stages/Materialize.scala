@@ -92,10 +92,11 @@ object Materialize {
   /** Entity vertices: subject/object mentions only (predicates become edge
     * names, reference `triplets.py:363`), `triplet_part` = last-writer by
     * lineage made deterministic via max_by, embeddings from the mention
-    * embedding table.
+    * embedding table. A name `canon` does not hold maps to itself, so the
+    * CC output alone (linked names only) is a complete `canon`.
     *
     * Join strategy mirrors [[canonicalEdges]]: by default the canonical
-    * map (identity rows included — one per distinct mention) is broadcast;
+    * map is broadcast;
     * `broadcastCanon = false` is for the regime where the mention
     * vocabulary outgrows broadcast — the join is a plain equi-join on
     * `name` with no hub skew (names are distinct on the probe side), so

@@ -907,4 +907,85 @@ class CompactionSuite extends AnyFunSuite {
     assert(io.snapshotFp(spark, "canonical_edge_entity_index") == fp,
       "replayed batch rewrote canonical index partitions")
   }
+
+  test("an lsh delta batch over a seeded store runs at most 80 Spark jobs") {
+    val s = spark; import s.implicits._
+    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    val io = new ParquetTableIO(
+      java.nio.file.Files.createTempDirectory("graftbudget").toString)
+    batches.take(2).foreach(b =>
+      new Pipeline(cfg).materialize(spark.createDataset(b), io))
+    val (_, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext) {
+      new Pipeline(cfg).materialize(spark.createDataset(batches(2)), io)
+    }
+    info(s"lsh delta batch: $jobs Spark jobs")
+    assert(jobs <= 80, s"the lsh delta batch ran $jobs Spark jobs")
+  }
+
+  test("reads take their schema from the footer and remember it: no job") {
+    val s = spark; import s.implicits._
+    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    val root = java.nio.file.Files.createTempDirectory("graftschema").toString
+    batches.take(2).foreach(b => new Pipeline(cfg)
+      .materialize(spark.createDataset(b), new ParquetTableIO(root)))
+    val tables = Seq("chunks", "chunk_embeddings", "chunk_vec_index",
+      "chunk_vec_meta", "terms", "edges", "edge_entity_index", "pred_index",
+      "canonical_edges", "canonical_edge_entity_index", "canonical_map",
+      "vertices", "aliases", "lsh_band_index")
+    // the partitioned tables and the flat empty ones reset leaves
+    def check(io: ParquetTableIO, what: String): Unit = tables.foreach { t =>
+      val inferred = spark.read.parquet(s"$root/$t").schema
+      val (first, firstJobs) = org.apache.spark.TestJobs.count(
+        spark.sparkContext)(io.read(spark, t).schema)
+      val (second, secondJobs) = org.apache.spark.TestJobs.count(
+        spark.sparkContext)(io.read(spark, t).schema)
+      assert(first == inferred && second == inferred, s"$what $t: schema differs")
+      assert(secondJobs == 0, s"$what $t: a second read ran $secondJobs jobs")
+      assert(firstJobs == 0, s"$what $t: the first read ran $firstJobs jobs")
+    }
+    check(new ParquetTableIO(root), "seeded")
+    new GraphRag(spark, new ParquetTableIO(root), cfg).reset()
+    check(new ParquetTableIO(root), "reset")
+  }
+
+  test("a delta batch rewrites only the changed names' canonical_map buckets") {
+    val s = spark; import s.implicits._
+    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    var root = ""
+    var before = Set.empty[String]
+    val io = ingest(cfg, r => { root = r; before = dataFiles(r, "canonical_map") })
+    val after = dataFiles(root, "canonical_map")
+    // the last batch links "parse tree" / "parsetree"; the map's other
+    // bucket (batch 2's "batchengine") keeps its file
+    assert(before.nonEmpty && before.forall(_.startsWith("cbucket=")),
+      s"canonical_map not bucketed before the last batch: $before")
+    assert((before intersect after).nonEmpty,
+      "every canonical_map file was rewritten")
+    assert(after != before, "the changed bucket was not rewritten")
+    val full = ingest(cfg.copy(fullCompaction = true))
+    assert(state(io, "canonical_map") == state(full, "canonical_map"))
+  }
+
+  test("reset → lsh batch → lsh batch equals the same batches on a fresh store") {
+    val s = spark; import s.implicits._
+    val cfg = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    def store() = new ParquetTableIO(
+      java.nio.file.Files.createTempDirectory("graftreset").toString)
+    val reset = store()
+    val rag = new GraphRag(spark, reset, cfg)
+    rag.ingest(spark.createDataset(batches(0)))
+    rag.reset()
+    val fresh = store()
+    // the reset store's first batch finds a flat empty canonical_map
+    // (whole overwrite, still empty), its second the first links (whole
+    // overwrite, now bucketed), its third a bucketed map (changed
+    // buckets only)
+    Seq(reset, fresh).foreach(io => batches.foreach(b =>
+      new Pipeline(cfg).materialize(spark.createDataset(b), io)))
+    Seq("edges", "canonical_edges", "canonical_edge_entity_index", "vertices",
+      "canonical_map", "aliases", "lsh_band_index").foreach { t =>
+      assert(state(reset, t) == state(fresh, t), s"$t diverged after reset")
+    }
+    assert(state(fresh, "canonical_map").nonEmpty)
+  }
 }

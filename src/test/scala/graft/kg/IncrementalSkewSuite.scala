@@ -6,6 +6,8 @@ import graft.ops.Skew
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 class IncrementalSkewSuite extends AnyFunSuite {
   lazy val spark = SparkSessionFixture.spark
 
@@ -230,6 +232,63 @@ class IncrementalSkewSuite extends AnyFunSuite {
       s"union-cap semantics diverged: inc=${incPairs(2)} one=${touchingBatch(onePairs(2))}")
   }
 
+  test("the incremental link embeds each distinct name at most once") {
+    val s = spark; import s.implicits._
+    // "quartzframes" is a candidate of both stored names, and the two
+    // batch names are candidates of each other: a per-pair embed would
+    // embed each batch name two or three times
+    val stored = Seq("quartzframe", "quartz frame")
+    val batch = Seq("quartzframes", "quartz frames")
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    CountingEmbedder.calls = calls
+    val pairs = stages.Link.lshAliasesIncremental(
+      batch.toDF("name"), stages.Link.bandSignatures(stored.toDF("name")),
+      new CountingEmbedder, threshold = 0.7, linkTopK = 10).collect()
+    assert(pairs.nonEmpty, "fixture links nothing")
+    val counts = calls.asScala.toMap
+    assert(counts.nonEmpty && counts.values.forall(_ == 1),
+      s"names embedded more than once: $counts")
+  }
+
+  test("incremental link == one-shot link over the union, on pairs touching " +
+      "the batch (generated corpus, scores bit-identical)") {
+    val s = spark; import s.implicits._
+    val gen = CorpusGen.generate(repos = 2, filesPerRepo = 12, seed = 5L)
+    val names = new Pipeline(GraftConfig(linkMode = "exact"))
+      .run(spark.createDataset(gen.rows)).mentionVecs
+      .select("name").as[String].collect().sorted.toSeq
+    // every third name is the batch; a few stored names re-appear in it
+    val batch = names.zipWithIndex.collect { case (n, i) if i % 3 == 0 || i % 17 == 1 => n }
+    val stored = names.zipWithIndex.collect { case (n, i) if i % 3 != 0 => n }
+    val emb = new embed.HashEmbedder()
+    val storedSigs = stages.Link.bandSignatures(stored.toDF("name"))
+    val union = stages.Link.mentionEmbeddings(names.toDF("name"), emb)
+    val touches = batch.toSet
+    Seq(256, 3).foreach { cap =>
+      // top-K not binding: both sides keep every pair over the threshold
+      val inc = stages.Link.lshAliasesIncremental(batch.toDF("name"), storedSigs,
+        emb, threshold = 0.6, linkTopK = 1000, maxBucket = cap)
+        .collect().map(p => (p.a, p.b, p.score)).toSet
+      val one = stages.Link.lshAliases(union, threshold = 0.6, linkTopK = 1000,
+        maxBucket = cap).collect().map(p => (p.a, p.b, p.score))
+        .filter(p => touches(p._1) || touches(p._2)).toSet
+      assert(inc.nonEmpty, s"cap $cap: fixture links nothing")
+      assert(inc == one, s"cap $cap: only incremental ${inc -- one}; only one-shot ${one -- inc}")
+    }
+  }
+
+  test("driver-side bucket ids equal the layout's pmod(hash(name), nb)") {
+    val s = spark; import s.implicits._
+    val names = Seq("", "a", "batch engine", "ｓ", "\uD83D\uDE00x", "ünïcödé") ++
+      (1 to 200).map(i => s"name$i")
+    Seq(1, 8, 128, 256).foreach { nb =>
+      val expected = names.toDF("name")
+        .select($"name", pmod(hash($"name"), lit(nb))).as[(String, Int)]
+        .collect().toMap
+      names.foreach(n => assert(DriverSide.bucketOf(n, nb) == expected(n), s"$n @ $nb"))
+    }
+  }
+
   test("partitioned layout: edge table written under sbucket dirs") {
     val s = spark; import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftpart").toString
@@ -245,4 +304,19 @@ class IncrementalSkewSuite extends AnyFunSuite {
       .getName.stripPrefix("sbucket=").toInt)
     assert(one.count() > 0)
   }
+}
+
+/** An embedder that counts its calls per text in a JVM-wide map (the
+  * suite runs Spark in local mode, so executor tasks share the JVM). */
+final class CountingEmbedder extends graft.kg.embed.Embedder {
+  private val inner = new graft.kg.embed.HashEmbedder()
+  def dim: Int = inner.dim
+  def embed(text: String): Array[Float] = {
+    CountingEmbedder.calls.merge(text, 1, (a: Integer, b: Integer) => a + b)
+    inner.embed(text)
+  }
+}
+
+object CountingEmbedder {
+  @volatile var calls = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 }

@@ -295,7 +295,8 @@ final class GraphRag(
     * backend's countable metadata (parquet footer record counts — the
     * Iceberg manifest analogue), zero count() jobs scheduled — the same
     * path the per-batch ingest stats use, measured ~2.5× cheaper on a
-    * sliver-heavy store (graft.tools.StatsProbe). */
+    * sliver-heavy store (graft.tools.StatsProbe, deleted; source at
+    * commit 957f54b). */
   def stats(): Map[String, Long] =
     Seq("chunks", "chunk_embeddings", "chunk_vec_index", "chunk_vec_meta",
       "terms", "edges", "edge_entity_index", "pred_index", "canonical_edges",

@@ -90,7 +90,6 @@ final case class GraftConfig(
     maxTokensPerChunk: Int = 200,
     topK: Int = 10,
     contextSize: Int = 2,
-    vectorSize: Int = 768,
     linkThreshold: Double = 0.96,
     linkTopK: Int = 10,
     vectorWeight: Double = 0.5,
@@ -110,20 +109,6 @@ final case class GraftConfig(
       * regime where distinct mentions outgrow broadcast; see
       * [[graft.kg.stages.Materialize.canonicalEdges]]. */
     saltedCanonicalJoin: Boolean = false,
-    /** Max members per LSH band bucket before the bucket is dropped as
-      * non-discriminative — bounds the banded self-join's candidate count
-      * deterministically on adversarial near-identical-name corpora; see
-      * [[graft.kg.stages.Link.lshAliases]]. */
-    lshMaxBucket: Int = 256,
-    /** Aliases-table lifecycle: true (default) = after each batch's
-      * compaction, rewrite the append-only alias-pair log down to the
-      * canonical star edges (one row per linked name), bounding its
-      * growth at O(linked names) under repeated ingest of overlapping
-      * corpora. Sound because the table's only consumer is connected
-      * components, for which any spanning structure of the same
-      * components is equivalent. false = keep every pair ever derived
-      * (the full provenance log). */
-    pruneAliases: Boolean = true,
     /** Incremental-batch compaction strategy: false (default) = DELTA
       * compaction — only the canonical-edge partitions and vertex
       * partitions touched by names whose canonical mapping actually
@@ -143,14 +128,15 @@ final case class GraftConfig(
       * in hand), so a saturated batch pays ~the full rebuild exactly.
       * 1.0 disables the gate (always delta when eligible); 0.0 forces
       * full rebuilds (≈ fullCompaction). Default 0.75, calibrated from
-      * the two measured endpoints (BatchReadProbe / the r7+r8 series):
+      * the two measured endpoints of the r7+r8 series
+      * (graft.tools.BatchReadProbe, deleted; source at commit 957f54b):
       * at ~0.5 bucket reach (a 40-doc batch's ~180 names hash into
       * ~130/256 buckets — the birthday effect makes bucket reach exceed
       * name share) the delta path still writes 0.26–0.63 of the full
       * rebuild's volume, so the gate must NOT fire there; at ~0.8 reach
       * (160-doc batches) delta's reads exceed full's for identical
       * writes, so it must. An earlier 0.5 default mis-routed the 40-doc
-      * regime to full rebuilds (caught by the r8 1× BatchReadProbe and
+      * regime to full rebuilds (caught by the r8 1× BatchReadProbe run and
       * documented in OPTIMIZATION_r08.md). */
     deltaSaturationFraction: Double = 0.75,
     /** Partition-bucket count for the hash-bucketed table layouts

@@ -406,7 +406,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     // launches a Spark job of one tiny task per directory — measured
     // 2.0 s of pure scheduling overhead per handle for the 1,028-dir
-    // vector index vs 0.15 s of serial driver listing (QueryProbe, r8).
+    // vector index vs 0.15 s of serial driver listing (r8, by
+    // graft.tools.QueryProbe, deleted; source at commit 957f54b).
     // Every table here is a local-FS path, where the driver walk is
     // strictly better at any directory count this sandbox reaches, so
     // the threshold is raised once per session (only if still at its
@@ -454,7 +455,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * parquet footers carry per-block row counts, summed here on a
     * 16-thread pool over [[walkDataFiles]]'s listing (~1.2 ms/file
     * measured). Replaces one Spark count() job per table per batch in
-    * the ingest stats: measured by graft.tools.StatsProbe on an 8-batch
+    * the ingest stats: measured by graft.tools.StatsProbe (deleted;
+    * source at commit 957f54b) on an 8-batch
     * incremental store, 9.6 s vs 24.5 s across all 13 tables — BOTH
     * dominated by the sliver-heavy vector index, which is why
     * [[compactSlivers]] bounds files-per-dir; on a compacted store both
@@ -489,7 +491,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * long batch series accumulates sliver files that tax every
     * listing/planning consumer — measured: the 1,024-dir vector index
     * reached ~6k data files by batch 6, inflating its stats count() to
-    * 5.6 s (graft.tools.StatsProbe). */
+    * 5.6 s (graft.tools.StatsProbe, deleted; source at commit 957f54b). */
   val SliverThreshold = 8
 
   /** A data file at or above this size is a BASE file: it is never

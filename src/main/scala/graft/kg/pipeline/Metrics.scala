@@ -46,8 +46,6 @@ object Metrics {
   /** All stage counters observed so far in this process. */
   def snapshot: Map[String, Long] = observed.asScala.toMap
 
-  def clear(): Unit = observed.clear()
-
   private val accumulators =
     new ConcurrentHashMap[String, org.apache.spark.util.LongAccumulator]()
 
@@ -64,10 +62,4 @@ object Metrics {
     accumulators.computeIfAbsent(
       s"${spark.sparkContext.applicationId}/$stage",
       _ => spark.sparkContext.longAccumulator(s"graft_$stage"))
-
-  /** Accumulated rows-processed per object-space stage. */
-  def accumulatorSnapshot: Map[String, Long] =
-    accumulators.asScala.map { case (k, v) =>
-      k.split('/').last -> v.value.toLong
-    }.toMap
 }

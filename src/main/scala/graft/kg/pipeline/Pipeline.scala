@@ -65,6 +65,19 @@ object Pipeline {
       numBuckets: Int = NumBuckets): org.apache.spark.sql.DataFrame =
     map.withColumn("cbucket", pmod(hash(col("name")), lit(numBuckets)))
 
+  /** Runs `body` with every frame of `frames` pinned that is neither
+    * cached already nor a local Dataset (reading one back runs no job,
+    * so a pin would only add one), then unpersists what it pinned and
+    * runs `cleanup` — also when `body` throws. */
+  private[pipeline] def withPinned[T](frames: Seq[Dataset[_]],
+      cleanup: () => Unit)(body: => T): T = {
+    import org.apache.spark.storage.StorageLevel
+    val pinned = frames.filter(df =>
+      df.storageLevel == StorageLevel.NONE && !graft.kg.DriverSide.isLocal(df))
+    pinned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try body finally { pinned.foreach(_.unpersist(blocking = false)); cleanup() }
+  }
+
   /** Store layout version of this engine, stamped as `format_version`
     * metadata by a fresh store's first materialize (the Iceberg
     * `format-version` table property). */
@@ -226,7 +239,7 @@ final class Pipeline(
             .map(ev => s";ev=${identityFp(ev, col("name"))}").getOrElse("") +
             existingBandIndex
               .map(bi => s";bi=${identityFp(bi, col("name"))}").getOrElse("")) +
-          s";mb=${config.lshMaxBucket}" // cap changes the alias output
+          s";mb=${Link.MaxBucket}" // cap changes the alias output
         ckpt.stage("aliases", "v1", fp + evFp) {
           (existingVertices, existingBandIndex) match {
             case (Some(_), Some(idx)) =>
@@ -240,14 +253,13 @@ final class Pipeline(
               // from the name, so the batch reads NO vertex rows at all.
               Link.lshAliasesIncremental(
                 Link.mentionOccurrences(triples), idx, embedder,
-                config.linkThreshold, config.linkTopK,
-                maxBucket = config.lshMaxBucket).toDF()
+                config.linkThreshold, config.linkTopK).toDF()
             case _ =>
               // fresh store, or the first lsh batch over an exact-mode
               // store (no band index yet; materialize signs its vertex
               // names this batch): one full-universe self-join
               Link.lshAliases(linkUniverse, config.linkThreshold,
-                config.linkTopK, maxBucket = config.lshMaxBucket).toDF()
+                config.linkTopK).toDF()
           }
         }.as[AliasPair]
       case _ => Link.exactAliases(spark) // stock reference behavior
@@ -363,36 +375,43 @@ final class Pipeline(
     // the materialization so the chunk→extract chain executes once, not
     // once per sink. run() itself stays fully lazy in exact mode (the
     // plan-once benchmarks must measure the real chain); lsh mode already
-    // pinned triples for its eager linking probe.
-    import org.apache.spark.storage.StorageLevel
-    def pin(df: Dataset[_]): Boolean =
-      if (df.storageLevel == StorageLevel.NONE) {
-        df.persist(StorageLevel.MEMORY_AND_DISK); true
-      } else false
-    val pinnedChunks = pin(r.chunks)
-    val pinnedTriples = pin(r.triples)
-    // aliases are consumed twice on incremental batches (the table MERGE
+    // pinned triples for its eager linking probe (released by cleanup).
+    // Aliases are consumed twice on incremental batches (the table MERGE
     // + the delta compaction's CC seed) — without the pin the second
     // consumption re-executes the LSH linking join. The incremental link
     // already returns a local Dataset, which a pin would only recompute.
-    val pinnedAliases = !graft.kg.DriverSide.isLocal(r.aliases) && pin(r.aliases)
-    // embeddings are deliberately NOT pinned (guide §5): they feed four
+    // Embeddings are deliberately NOT pinned (guide §5): they feed four
     // consumers (table append, computeThresholds, the vec-index layout,
     // the staleness probe), but at dim=768 the cache is ~1 GB at the
     // 250k-doc build and measured as pure memory-pressure loss — stacked
     // on merge()'s own pin of the 4×-row vec-index delta it tipped the
     // 8 GB local JVM into eviction churn (vec-index write 18.7 s →
-    // 435 s). Instead, the FRESH-store index build below reads the
+    // 435 s). Instead, the FRESH-store index build reads the
     // just-written chunk_embeddings table (rebuildIndexWholesale), so
     // the in-flight embed pipeline runs once per batch for the table
     // append; only steady-state incremental batches re-embed per layout
     // leg, over batch-sized frames off the pinned chunks cache.
-    // edges ARE pinned: narrow rows (strings, no vectors — O(10 MB) at
+    // Edges ARE pinned: narrow rows (strings, no vectors — O(10 MB) at
     // this scale), consumed by the edges MERGE, pred_index, the entity
     // index, and (lsh batches) delta compaction's discovery — each
     // re-ran the (subj,pred,obj) dedup shuffle over the triples cache
-    // unpinned
-    val pinnedEdges = pin(r.edges)
+    // unpinned.
+    // A batch whose write throws leaves batch_inflight set (crash
+    // detection) but releases its pins, so a long-lived session keeps
+    // no cache of a failed batch.
+    Pipeline.withPinned(Seq(r.chunks, r.triples, r.aliases, r.edges), r.cleanup) {
+      writeTables(spark, io, r, nb, existing, priorIncomplete,
+        verticesPreexisted, bandIndexStored)
+    }
+    storeCounts(spark, io)
+  }
+
+  /** The batch's table writes, in the order the crash heals assume;
+    * clears `batch_inflight` after the last one. */
+  private def writeTables(spark: SparkSession, io: GraphTableIO,
+      r: Result, nb: Int, existing: Option[DataFrame],
+      priorIncomplete: Boolean, verticesPreexisted: Boolean,
+      bandIndexStored: Boolean): Unit = {
     // physical layout (SURVEY.md §4.4): edges bucketed by SUBJECT hash,
     // vertices by name hash — partition-parallel MERGE and pruning;
     // production = Iceberg bucket(N, col) transforms. The subject is the
@@ -643,17 +662,18 @@ final class Pipeline(
     // same components is equivalent — so compact the append-only pair
     // log down to the canonical star edges, bounding its size at
     // O(linked names) instead of O(every pair ever derived)
-    if (config.pruneAliases && io.exists(spark, "canonical_map") &&
+    if (io.exists(spark, "canonical_map") &&
         io.exists(spark, "aliases"))
       io.overwrite(spark, "aliases", io.read(spark, "canonical_map")
         .select(col("canonicalName").as("a"), col("name").as("b"),
           lit(1.0).as("score")))
     io.clearFlag(spark, "batch_inflight")
-    if (pinnedChunks) r.chunks.unpersist(blocking = false)
-    if (pinnedTriples) r.triples.unpersist(blocking = false)
-    if (pinnedAliases) r.aliases.unpersist(blocking = false)
-    if (pinnedEdges) r.edges.unpersist(blocking = false)
-    r.cleanup()
+  }
+
+  /** Per-table row counts of the store after a batch, plus the observed
+    * in-flight stage counters. */
+  private def storeCounts(spark: SparkSession,
+      io: GraphTableIO): Map[String, Long] = {
     val tableCounts = Seq("chunks", "chunk_embeddings", "chunk_vec_index",
       "terms", "edges", "edge_entity_index", "pred_index", "canonical_edges",
       "canonical_edge_entity_index", "vertices", "aliases", "lsh_band_index")
@@ -661,6 +681,7 @@ final class Pipeline(
       // metadata-only counts (parquet footer sums — the Iceberg manifest
       // record_count analogue): no per-table count() job per batch.
       // Measured 2.5× cheaper across the store by graft.tools.StatsProbe
+      // (deleted; source at commit 957f54b)
       .map {
         // the vector index is 1,024 leaf dirs bounded at ~SliverThreshold
         // files each, so even the footer pass pays ~8k metadata reads

@@ -57,7 +57,9 @@ object Canonicalize {
   }
 
   /** Driver-side union-find over an edge list: every non-minimum member
-    * of each component mapped to the component minimum. */
+    * of each component mapped to the component minimum. Names order by
+    * their UTF-8 bytes, as Spark's `least`/`min` in the distributed star
+    * loop do, so both paths pick the same canonical name. */
   private[kg] def solveLocal(edges: Seq[(String, String)]): Seq[CanonicalMapping] = {
     val parent = mutable.Map.empty[String, String]
     // iterative find (walk to root, second pass compresses): union-by-min
@@ -71,13 +73,14 @@ object Canonicalize {
       while (c != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
+    val order = graft.kg.DriverSide.utf8Ordering
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (order.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     edges.flatMap { case (a, b) => Seq(a, b) }.distinct.groupBy(find).toSeq
       .flatMap { case (_, ns) =>
-        val m = ns.min
+        val m = ns.min(order)
         ns.collect { case n if n != m => CanonicalMapping(n, m) }
       }
   }

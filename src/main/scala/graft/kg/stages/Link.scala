@@ -38,6 +38,11 @@ import scala.collection.mutable
   */
 object Link {
 
+  /** Max members per LSH band bucket before the bucket is dropped as
+    * non-discriminative: bounds the banded join's candidate count
+    * deterministically on adversarial near-identical-name corpora. */
+  val MaxBucket = 256
+
   /** Distinct lowercased mentions with their roles. Role priority for the
     * vertex `triplet_part` property is resolved in [[Materialize]]. */
   def mentions(triples: Dataset[Triple]): DataFrame = {
@@ -176,7 +181,7 @@ object Link {
       linkTopK: Int,
       jaccardDistanceCap: Double = 0.7,
       numBands: Int = 8,
-      maxBucket: Int = 256): Dataset[AliasPair] = {
+      maxBucket: Int = MaxBucket): Dataset[AliasPair] = {
     val spark = newNames.sparkSession
     import spark.implicits._
     type Key = (Int, String) // (band, mh)
@@ -284,7 +289,7 @@ object Link {
       linkTopK: Int,
       jaccardDistanceCap: Double = 0.7,
       numBands: Int = 8,
-      maxBucket: Int = 256): Dataset[AliasPair] = {
+      maxBucket: Int = MaxBucket): Dataset[AliasPair] = {
     val spark = mentionVecs.sparkSession
     import spark.implicits._
 

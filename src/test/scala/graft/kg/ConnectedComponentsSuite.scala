@@ -10,7 +10,10 @@ import scala.util.Random
 class ConnectedComponentsSuite extends AnyFunSuite {
   lazy val spark = SparkSessionFixture.spark
 
+  /** Union-find oracle; names order by their UTF-8 bytes (Spark's string
+    * order), the order both CC paths must follow. */
   private def bruteForce(edges: Seq[(String, String)]): Map[String, String] = {
+    val order = DriverSide.utf8Ordering
     val parent = scala.collection.mutable.Map.empty[String, String]
     def find(x: String): String = {
       val p = parent.getOrElseUpdate(x, x)
@@ -18,14 +21,14 @@ class ConnectedComponentsSuite extends AnyFunSuite {
     }
     def union(a: String, b: String): Unit = {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (order.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     edges.foreach { case (a, b) => union(a, b) }
     // canonical = min of component
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val byRoot = nodes.groupBy(find)
     byRoot.flatMap { case (_, ns) =>
-      val m = ns.min
+      val m = ns.min(order)
       ns.map(_ -> m)
     }.toMap
   }
@@ -66,6 +69,14 @@ class ConnectedComponentsSuite extends AnyFunSuite {
   test("long chain (worst diameter) converges") {
     val edges = (0 until 40).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
     checkGraph(edges, "chain")
+  }
+
+  test("names outside the BMP order by UTF-8 bytes on both paths") {
+    // U+1F600 sorts below U+E000 in UTF-16 units (a surrogate, 0xD83D)
+    // but above it in UTF-8 bytes (F0 9F.. vs EE 80..)
+    val edges = Seq(("x\uD83D\uDE00", "x\uE000"), ("x\uE000", "y"))
+    checkGraph(edges, "utf8")
+    assert(bruteForce(edges)("x\uD83D\uDE00") == "x\uE000")
   }
 
   test("two disjoint cliques stay separate") {

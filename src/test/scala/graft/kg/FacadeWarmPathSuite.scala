@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    never executes (or reads) the hits side, and construction itself
   *    schedules no jobs (the eagerly-built hits side was measured at
   *    ~1.8 s of a 1.93 s triplets-only query on the 250k bench store,
-  *    graft.tools.RelProbe);
+  *    graft.tools.RelProbe, deleted; source at commit 957f54b);
   *  - the warm query path makes ZERO table-IO calls (existence probes,
   *    reads, metadata) — everything is resolved once and cached until
   *    ingest/reset;
@@ -18,13 +18,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *    writer process must not keep pruning with a stale fallback count);
   *  - the store-format gate: a fresh store is stamped with
   *    `format_version` by its first ingest, and a populated store without
-  *    the current stamp is refused by ingest and query alike.
+  *    the current stamp is refused by ingest and query alike;
+  *  - a batch whose table write throws leaves no cached Dataset behind
+  *    and keeps its `batch_inflight` marker for the crash heal.
   */
 class FacadeWarmPathSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSessionFixture.spark
 
-  /** Delegating IO that counts every call crossing the table layer. */
-  final class CountingIO(inner: GraphTableIO) extends GraphTableIO {
+  /** Delegating IO that counts every call crossing the table layer;
+    * `failMerge` names a table whose merge throws instead. */
+  final class CountingIO(inner: GraphTableIO, failMerge: String = "")
+      extends GraphTableIO {
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val reads = scala.collection.concurrent.TrieMap.empty[String, Int]
     private def n[T](v: T): T = { calls.incrementAndGet(); v }
@@ -36,7 +40,9 @@ class FacadeWarmPathSuite extends AnyFunSuite {
     }
     def merge(spark: SparkSession, table: String, delta: DataFrame,
         keys: Seq[String], partitionCols: Seq[String]): Unit =
-      inner.merge(spark, table, delta, keys, partitionCols)
+      if (table == failMerge)
+        throw new IllegalStateException(s"injected failure at merge($table)")
+      else inner.merge(spark, table, delta, keys, partitionCols)
     def overwrite(spark: SparkSession, table: String, df: DataFrame,
         partitionCols: Seq[String]): Unit =
       inner.overwrite(spark, table, df, partitionCols)
@@ -83,26 +89,18 @@ class FacadeWarmPathSuite extends AnyFunSuite {
       "Yonder extends Walnut. Xylem uses Zebra."))
 
     io.calls.set(0); io.reads.clear()
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+    val (res, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext) {
+      rag.query("What does Zebra use?", includeTriplets = true)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val res = rag.query("What does Zebra use?", includeTriplets = true)
-      Thread.sleep(1000) // listener events post asynchronously
-      assert(jobs == 0, s"query construction scheduled $jobs job(s)")
-      assert(io.calls.get() == 0,
-        s"query construction crossed the IO layer ${io.calls.get()} time(s)")
+    assert(jobs == 0, s"query construction scheduled $jobs job(s)")
+    assert(io.calls.get() == 0,
+      s"query construction crossed the IO layer ${io.calls.get()} time(s)")
 
-      // consuming ONLY the triplets must not read terms/embeddings/chunks
-      assert(res.triplets.get.count() > 0)
-      assert(!io.reads.keySet.exists(
-        Set("terms", "chunk_embeddings", "chunks", "chunk_vec_index")),
-        s"triplets-only consumption read hits-side tables: ${io.reads.keySet}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // consuming ONLY the triplets must not read terms/embeddings/chunks
+    assert(res.triplets.get.count() > 0)
+    assert(!io.reads.keySet.exists(
+      Set("terms", "chunk_embeddings", "chunks", "chunk_vec_index")),
+      s"triplets-only consumption read hits-side tables: ${io.reads.keySet}")
   }
 
   test("warm hybrid and context queries run at most 4 Spark jobs each") {
@@ -118,29 +116,34 @@ class FacadeWarmPathSuite extends AnyFunSuite {
       "hybrid_exact" -> (() => rag.query(q, includeTriplets = false).chunks),
       "hybrid_ann" -> (() => rag.query(q, includeTriplets = false, vectorMode = "ann").chunks),
       "context" -> (() => rag.query(q, withContext = true, includeTriplets = false).chunks))
-    // count only the jobs of this thread's job group: Spark hands the
-    // group to the threads that run broadcasts and subqueries too
-    val group = "facade-warm-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try kinds.foreach { case (kind, run) =>
+    kinds.foreach { case (kind, run) =>
       run().collect() // warm: table handles, num_buckets, ANN sidecar
-      spark.sparkContext.setJobGroup(group, kind)
-      try {
-        jobs.set(0)
-        assert(run().collect().nonEmpty, kind)
-        Thread.sleep(1000) // listener events post asynchronously
-        info(s"warm $kind: ${jobs.get()} Spark jobs")
-        assert(jobs.get() <= 4, s"warm $kind query ran ${jobs.get()} Spark jobs")
-      } finally spark.sparkContext.clearJobGroup()
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val (rows, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext) {
+        run().collect()
+      }
+      assert(rows.nonEmpty, kind)
+      info(s"warm $kind: $jobs Spark jobs")
+      assert(jobs <= 4, s"warm $kind query ran $jobs Spark jobs")
+    }
+  }
+
+  test("a batch whose table write throws releases its cache pins and " +
+      "stays marked in flight") {
+    val root = java.nio.file.Files.createTempDirectory("graft_pinfail").toString
+    val rag = new GraphRag(spark, new CountingIO(new ParquetTableIO(root),
+      failMerge = "vertices"), GraftConfig(linkMode = "lsh"))
+    def cached = org.apache.spark.sql.TestCache.entries(spark)
+    val before = cached
+    val e = intercept[IllegalStateException] {
+      rag.ingest(corpusOf(
+        "Zebra imports Yonder. Zebra calls Xylem.",
+        "Yonder extends Walnut. Xylem uses Zebra."))
+    }
+    assert(e.getMessage.contains("merge(vertices)"))
+    assert(cached == before,
+      s"a failed batch left ${cached - before} cached Dataset(s)")
+    assert(new ParquetTableIO(root).flagSet(spark, "batch_inflight"),
+      "a failed batch must stay marked in flight for the crash heal")
   }
 
   test("warm query path makes zero table-IO calls after the first query") {

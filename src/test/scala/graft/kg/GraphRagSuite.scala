@@ -180,18 +180,11 @@ class GraphRagSuite extends AnyFunSuite {
 
   test("stats() is metadata-only: zero Spark jobs scheduled") {
     engine.stats() // warm any lazy session state first
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    val (st, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext) {
+      engine.stats()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val st = engine.stats()
-      Thread.sleep(1000) // listener events post asynchronously
-      assert(st.nonEmpty && st("chunks") > 0)
-      assert(jobs == 0, s"stats() scheduled $jobs Spark jobs — footer path lost")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(st.nonEmpty && st("chunks") > 0)
+    assert(jobs == 0, s"stats() scheduled $jobs Spark jobs — footer path lost")
   }
 
   test("re-ingest is idempotent; stats stable; reset truncates") {

@@ -16,7 +16,9 @@ import java.nio.charset.StandardCharsets
 final class Checkpoint(spark: SparkSession, root: String, enabled: Boolean) {
   import org.apache.hadoop.fs.Path
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // stage data and manifests go through the store's FileSystem
+  private lazy val fs = StoreFileSystem.forRoot(root, spark.sparkContext.hadoopConfiguration)._1
+  private def read(path: String) = spark.read.options(StoreFileSystem.Options).parquet(path)
 
   private def manifestPath(stage: String) = new Path(s"$root/$stage/_manifest.json")
   private def dataPath(stage: String) = s"$root/$stage/data"
@@ -53,11 +55,12 @@ final class Checkpoint(spark: SparkSession, root: String, enabled: Boolean) {
       s"""{"specVersion":"$specVersion","inputFingerprint":"$inputFingerprint""""
     readManifest(stageName) match {
       case Some(m) if m.startsWith(expectedPrefix) =>
-        spark.read.parquet(dataPath(stageName))
+        read(dataPath(stageName))
       case _ =>
         val df = compute
-        df.write.mode(SaveMode.Overwrite).parquet(dataPath(stageName))
-        val out = spark.read.parquet(dataPath(stageName))
+        df.write.options(StoreFileSystem.Options).mode(SaveMode.Overwrite)
+          .parquet(dataPath(stageName))
+        val out = read(dataPath(stageName))
         // per-partition lineage: rows per written file (file = partition
         // of the stage output), one aggregation pass. The per-file list
         // is CAPPED: a 10^12-file-scale stage can emit millions of output

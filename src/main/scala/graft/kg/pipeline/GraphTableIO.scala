@@ -73,21 +73,23 @@ trait GraphTableIO extends Serializable {
     * provide one; callers fall back to a row-scan fingerprint. A
     * false-negative (identical content, different fp — e.g. after a
     * rewrite) only costs a checkpoint miss, never wrong reuse. */
-  def snapshotFp(spark: SparkSession, table: String): String = ""
+  def snapshotFp(spark: SparkSession, table: String): String
 
   /** Run `f` holding the store's single-writer lease — a second
     * concurrent writer must FAIL FAST instead of corrupting the
-    * non-transactional table swaps. Default: passthrough (a
-    * transactional backend — Iceberg optimistic commit — enforces this
-    * at commit time instead). */
-  def withWriterLock[T](spark: SparkSession)(f: => T): T = f
+    * non-transactional table swaps. A transactional backend (Iceberg
+    * optimistic commit) enforces this at commit time and may pass
+    * through. Abstract, like the flags and [[snapshotFp]]: a decorator
+    * that forgot one would silently lose the lease or crash detection. */
+  def withWriterLock[T](spark: SparkSession)(f: => T): T
   /** Durable marker flags (crash detection — e.g. `batch_inflight`, set
     * at batch start and cleared after the compaction completes, so a
-    * crashed batch is visible to its successor). Defaults: no-op/false —
-    * a transactional backend makes the whole batch atomic instead. */
-  def setFlag(spark: SparkSession, name: String): Unit = ()
-  def clearFlag(spark: SparkSession, name: String): Unit = ()
-  def flagSet(spark: SparkSession, name: String): Boolean = false
+    * crashed batch is visible to its successor). A transactional backend
+    * makes the whole batch atomic instead, and may implement them as
+    * no-op/false. */
+  def setFlag(spark: SparkSession, name: String): Unit
+  def clearFlag(spark: SparkSession, name: String): Unit
+  def flagSet(spark: SparkSession, name: String): Boolean
 
   /** Tiny durable layout metadata (key → value) — the Iceberg
     * table-properties analogue: records layout constants every reader
@@ -104,6 +106,11 @@ trait GraphTableIO extends Serializable {
   * issue `MERGE INTO <table> t USING <delta> d ON <keys> WHEN NOT MATCHED
   * THEN INSERT *` against Iceberg with identical key semantics.
   *
+  * Every read, write and driver-side file operation goes through
+  * [[StoreFileSystem]] (per-operation options; the driver-side instance
+  * is built once per session conf), which sets file modes without
+  * forking a `chmod` per file.
+  *
   * Session side effect: for a local root, the first [[read]] raises the
   * SESSION-WIDE `spark.sql.sources.parallelPartitionDiscovery.threshold`
   * (to 16384), and only if it is still at its default of 32; an explicit
@@ -112,13 +119,25 @@ trait GraphTableIO extends Serializable {
 final class ParquetTableIO(root: String) extends GraphTableIO {
   private def path(table: String) = s"$root/$table"
 
-  private def fs(spark: SparkSession) = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists(spark: SparkSession, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** (session Hadoop conf, the store FileSystem and conf built from it). */
+  @transient @volatile private var storeMemo: (org.apache.hadoop.conf.Configuration,
+      (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.conf.Configuration)) = _
+  private def store(spark: SparkSession) = {
+    val base = spark.sparkContext.hadoopConfiguration
+    val m = storeMemo
+    if (m != null && (m._1 eq base)) m._2
+    else {
+      val s = StoreFileSystem.forRoot(root, base)
+      storeMemo = (base, s)
+      s
+    }
   }
+  private def fs(spark: SparkSession) = store(spark)._1
+  private def reader(spark: SparkSession) = spark.read.options(StoreFileSystem.Options)
+  private def writer(df: DataFrame) = df.write.options(StoreFileSystem.Options)
+
+  def exists(spark: SparkSession, table: String): Boolean =
+    fs(spark).exists(new org.apache.hadoop.fs.Path(path(table), "_SUCCESS"))
 
   /** Lease-file writer lock on `$root/_writer.lock` — the second
     * writer's acquire fails, so it errors out before touching any
@@ -342,7 +361,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     else
       org.apache.hadoop.fs.FileContext
-        .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
+        .getFileContext(dst.toUri, store(spark)._2)
         .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     ()
   }
@@ -391,8 +410,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     }
     firstFile(new org.apache.hadoop.fs.Path(path(table))).flatMap { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
-          spark.sparkContext.hadoopConfiguration))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, store(spark)._2))
       try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
         .map(org.apache.spark.sql.types.DataType.fromJson)
@@ -422,7 +440,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       if (spark.conf.get(k, "32") == "32") spark.conf.set(k, "16384")
     }
     val df = Option(schemaMemo.get(table)).orElse(footerSchema(spark, table))
-      .fold(spark.read.parquet(path(table)))(s => spark.read.schema(s).parquet(path(table)))
+      .fold(reader(spark).parquet(path(table)))(s => reader(spark).schema(s).parquet(path(table)))
     schemaMemo.put(table, df.schema)
     df
   }
@@ -466,8 +484,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * resolution, not footer cost; see [[walkDataFiles]]. Measure, then
     * measure what you measured.) */
   override def rowCount(spark: SparkSession, table: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = walkDataFiles(fs(spark),
+    val (hfs, conf) = store(spark)
+    val files = walkDataFiles(hfs,
       new org.apache.hadoop.fs.Path(path(table)))
       .filter(_.getLen > 0).map(_.getPath)
     if (files.isEmpty) return 0L
@@ -491,7 +509,11 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * long batch series accumulates sliver files that tax every
     * listing/planning consumer — measured: the 1,024-dir vector index
     * reached ~6k data files by batch 6, inflating its stats count() to
-    * 5.6 s (graft.tools.StatsProbe, deleted; source at commit 957f54b). */
+    * 5.6 s (graft.tools.StatsProbe, deleted; source at commit 957f54b).
+    * That tax is read-side work per file: a listing entry, a footer read
+    * and a scan split. Reads fork no process, so it is not the per-file
+    * write cost [[StoreFileSystem]] removed (a forked `chmod` per file,
+    * `.crc` file and directory). */
   val SliverThreshold = 8
 
   /** A data file at or above this size is a BASE file: it is never
@@ -518,7 +540,10 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * chunk_embeddings) compact too, with the table root as the one
     * "dir": their appends land one file per shuffle task per batch, so
     * without this every listing consumer would crawl O(batches ·
-    * shuffle-partitions) files at long batch horizons.
+    * shuffle-partitions) files at long batch horizons. Each sliver costs
+    * its readers a listing entry, a footer read and a scan split; its
+    * write cost about three forked `chmod`s as well until the store's
+    * writes went through [[StoreFileSystem]].
     *
     * Crash safety (write-ahead redo plan): the staged merge is written
     * FIRST, then the full (mv staged→live, rm sliver) op list commits to
@@ -552,7 +577,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     if (over.isEmpty) return
     val tmp = path(table) + "__tmpcompact"
     val sliverFiles = over.flatMap(_._2).map(_.toString)
-    val src = spark.read.option("basePath", qbase).parquet(sliverFiles: _*)
+    val src = reader(spark).option("basePath", qbase).parquet(sliverFiles: _*)
     // flat tables merge to ONE file (the whole point); partitioned ones
     // cluster per dir as writeSwap does. Merged output keeps the
     // append path's sorted-by-key file invariant (see appendNew).
@@ -564,9 +589,8 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
         clustered.sortWithinPartitions(
           (partitionCols ++ sortKeys).distinct.map(col): _*)
       else clustered
-    val writer = sorted.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(tmp)
+    val w = writer(sorted).mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
     // redo plan: every mv/rm the swap will perform, committed durably
     // BEFORE the first live-table mutation
     val ops: Seq[(String, String, String)] = over.flatMap { case (d, slivers) =>
@@ -801,9 +825,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       // file, so a no-op replay (all keys already present — crash retry,
       // streaming redelivery) leaves storage untouched without an
       // emptiness probe
-      clusterByPartition(spark, newRows, partitionCols)
-        .sortWithinPartitions(sortCols: _*)
-        .write.partitionBy(partitionCols: _*)
+      writer(clusterByPartition(spark, newRows, partitionCols)
+        .sortWithinPartitions(sortCols: _*))
+        .partitionBy(partitionCols: _*)
         .mode(SaveMode.Append).parquet(path(table))
     else {
       // a flat write of zero rows still writes a zero-row part file, which
@@ -816,12 +840,13 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       val counted = spark.createDataFrame(
         newRows.rdd.mapPartitions(_.map { r => rows.add(1); r }), newRows.schema)
       val dir = new org.apache.hadoop.fs.Path(path(table))
-      val before = walkDataFiles(fs(spark), dir).map(_.getPath).toSet
-      counted.sortWithinPartitions(sortCols: _*)
-        .write.mode(SaveMode.Append).parquet(path(table))
+      val hfs = fs(spark)
+      val before = walkDataFiles(hfs, dir).map(_.getPath).toSet
+      writer(counted.sortWithinPartitions(sortCols: _*))
+        .mode(SaveMode.Append).parquet(path(table))
       if (rows.sum == 0) {
-        walkDataFiles(fs(spark), dir).map(_.getPath).filterNot(before)
-          .foreach(fs(spark).delete(_, false))
+        walkDataFiles(hfs, dir).map(_.getPath).filterNot(before)
+          .foreach(hfs.delete(_, false))
         return
       }
     }
@@ -850,10 +875,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     // overwrite), where the swap is a single atomic metadata operation.
     val tmp = path(table) + "__tmpparts"
     // same one-task-per-partition-dir clustering as writeSwap
-    clusterByPartition(spark, df, Seq(partitionCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    writer(clusterByPartition(spark, df, Seq(partitionCol)))
+      .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp)
+    val fs = this.fs(spark)
     partitions.distinct.foreach { v =>
       val dirName = s"$partitionCol=$v"
       val dst = new org.apache.hadoop.fs.Path(path(table), dirName)
@@ -867,7 +891,12 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
   /** The clustering step of every partitioned write here (writeSwap,
     * appendNew, overwritePartitions, compactSlivers): hash-partitions
     * `df` on `partitionCols` into an explicit defaultParallelism tasks —
-    * see [[writeSwap]] for why the count must be explicit. */
+    * see [[writeSwap]] for why the count must be explicit. Clustering
+    * writes one file per touched dir instead of one per task per dir.
+    * Each file costs a Parquet writer and footer, a `.crc` file and a
+    * commit rename; under the stock local FileSystem it also forked
+    * about 3.3 `chmod` processes (~1.6 ms each, counting its `.crc` and
+    * dirs), which [[StoreFileSystem]] replaces with in-process calls. */
   private def clusterByPartition(spark: SparkSession, df: DataFrame,
       partitionCols: Seq[String]): DataFrame =
     df.repartition(spark.sparkContext.defaultParallelism,
@@ -894,7 +923,13 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     * dir to exactly one task, so the files are the same. Measured on the
     * 800-dir vector-index build of a 520-doc ingest at local[4] on a
     * 4-core machine: 11.8 s in one write task with no count, 5.7-6.8 s
-    * across 4 write tasks with it (same 800 files and bytes). */
+    * across 4 write tasks with it (same 800 files and bytes). Both
+    * figures predate [[StoreFileSystem]]: each of those files, its `.crc`
+    * file and its dirs then forked a `chmod` (~3.3 processes per file at
+    * ~1.6 ms each, about 4 s of the one-task 11.8 s), so spreading the
+    * write over 4 tasks largely spread process forks. Without the forks
+    * the same build's traced span went from 2.40 s to 0.73 s (kgbench
+    * `bulk_ingest`, seed 1, `io.chunk_vec_index.s`, same 4-core VM). */
   private def writeSwap(spark: SparkSession, table: String, df: DataFrame,
       partitionCols: Seq[String]): Unit = {
     // a full rewrite may change the partition tree (or leave a FLAT
@@ -906,11 +941,9 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
     val out =
       if (partitionCols.nonEmpty) clusterByPartition(spark, df, partitionCols)
       else df
-    val writer = out.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val w = writer(out).mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
+    val fs = this.fs(spark)
     if (partitionCols.nonEmpty) {
       // an EMPTY partitioned write creates no partition dirs and hence
       // ZERO parquet files — the table would be unreadable (no schema to
@@ -920,7 +953,7 @@ final class ParquetTableIO(root: String) extends GraphTableIO {
       val anyData = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .exists(s => !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith("."))
-      if (!anyData) df.limit(0).write.mode(SaveMode.Overwrite).parquet(tmp)
+      if (!anyData) writer(df.limit(0)).mode(SaveMode.Overwrite).parquet(tmp)
     }
     val dst = new org.apache.hadoop.fs.Path(path(table))
     fs.delete(dst, true)

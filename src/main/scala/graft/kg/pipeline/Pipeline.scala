@@ -214,87 +214,91 @@ final class Pipeline(
       if (config.linkMode == "lsh") () => { triples.unpersist(blocking = false); () }
       else () => ()
 
-    val mentions = Link.mentionNames(triples)
-    val mentionVecs = Link.mentionEmbeddings(mentions, embedder)
-    // incremental mode: the linkable universe = new mentions ∪ existing
-    // entity names (exact duplicates collapse — names are the MERGE key)
-    val linkUniverse = existingVertices match {
-      case Some(ev) =>
-        mentionVecs.unionByName(ev.select($"name", $"vec")).dropDuplicates("name")
-      case None => mentionVecs
-    }
+    // until run() returns the pin is released here on a throw (the eager
+    // link, the CC solve, a checkpoint write); after that, by cleanup
+    try {
+      val mentions = Link.mentionNames(triples)
+      val mentionVecs = Link.mentionEmbeddings(mentions, embedder)
+      // incremental mode: the linkable universe = new mentions ∪ existing
+      // entity names (exact duplicates collapse — names are the MERGE key)
+      val linkUniverse = existingVertices match {
+        case Some(ev) =>
+          mentionVecs.unionByName(ev.select($"name", $"vec")).dropDuplicates("name")
+        case None => mentionVecs
+      }
 
-    val aliasesLazy: Dataset[AliasPair] = config.linkMode match {
-      case "lsh" =>
-        // the aliases stage ALSO depends on the prior graph state in
-        // incremental mode — fold a vertices-snapshot marker into its
-        // fingerprint (but not into chunks/triples, which don't)
-        // prior-state identity: prefer the store's snapshot fingerprint
-        // (O(metadata) — the Iceberg-snapshot-id analogue, supplied by
-        // materialize) over scanning the cumulative vertex/index tables
-        // per batch, which is the one remaining O(history) action the
-        // resume path would otherwise pay at every incremental ingest
-        val evFp = storeSnapshotFp.map(s => s";store=$s").getOrElse(
-          existingVertices
-            .map(ev => s";ev=${identityFp(ev, col("name"))}").getOrElse("") +
-            existingBandIndex
-              .map(bi => s";bi=${identityFp(bi, col("name"))}").getOrElse("")) +
-          s";mb=${Link.MaxBucket}" // cap changes the alias output
-        ckpt.stage("aliases", "v1", fp + evFp) {
-          (existingVertices, existingBandIndex) match {
-            case (Some(_), Some(idx)) =>
-              // INCREMENTAL linking: probe the stored band index with
-              // the batch's signatures — per-batch linking compute
-              // scales with the batch, not the cumulative mention
-              // universe (re-signing + self-joining the universe every
-              // batch was the last O(history) stage of the ingest path).
-              // It runs here, once, on collected batch-sized sets and
-              // returns a local Dataset; old-side vectors are recomputed
-              // from the name, so the batch reads NO vertex rows at all.
-              Link.lshAliasesIncremental(
-                Link.mentionOccurrences(triples), idx, embedder,
-                config.linkThreshold, config.linkTopK).toDF()
-            case _ =>
-              // fresh store, or the first lsh batch over an exact-mode
-              // store (no band index yet; materialize signs its vertex
-              // names this batch): one full-universe self-join
-              Link.lshAliases(linkUniverse, config.linkThreshold,
-                config.linkTopK).toDF()
-          }
-        }.as[AliasPair]
-      case _ => Link.exactAliases(spark) // stock reference behavior
-    }
-    // the full-universe link over an existing store (the first lsh batch
-    // over an exact-mode store, which has no band index) scans the LIVE
-    // vertices listing lazily, and the later bucket-selective vertices
-    // merge DELETES those files; a persist is not durable enough (block
-    // loss → recompute over the stale listing → FileNotFoundException
-    // mid-materialize), so cut the lineage eagerly before any table swap.
-    // Checkpoint-enabled runs re-read the stage's own parquet, and the
-    // band-index path reads only append-only tables — neither needs this.
-    val aliases: Dataset[AliasPair] =
-      if (existingVertices.isDefined && existingBandIndex.isEmpty &&
-          config.checkpointDir.isEmpty)
-        aliasesLazy.localCheckpoint(true)
-      else aliasesLazy
+      val aliasesLazy: Dataset[AliasPair] = config.linkMode match {
+        case "lsh" =>
+          // the aliases stage ALSO depends on the prior graph state in
+          // incremental mode — fold a vertices-snapshot marker into its
+          // fingerprint (but not into chunks/triples, which don't)
+          // prior-state identity: prefer the store's snapshot fingerprint
+          // (O(metadata) — the Iceberg-snapshot-id analogue, supplied by
+          // materialize) over scanning the cumulative vertex/index tables
+          // per batch, which is the one remaining O(history) action the
+          // resume path would otherwise pay at every incremental ingest
+          val evFp = storeSnapshotFp.map(s => s";store=$s").getOrElse(
+            existingVertices
+              .map(ev => s";ev=${identityFp(ev, col("name"))}").getOrElse("") +
+              existingBandIndex
+                .map(bi => s";bi=${identityFp(bi, col("name"))}").getOrElse("")) +
+            s";mb=${Link.MaxBucket}" // cap changes the alias output
+          ckpt.stage("aliases", "v1", fp + evFp) {
+            (existingVertices, existingBandIndex) match {
+              case (Some(_), Some(idx)) =>
+                // INCREMENTAL linking: probe the stored band index with
+                // the batch's signatures — per-batch linking compute
+                // scales with the batch, not the cumulative mention
+                // universe (re-signing + self-joining the universe every
+                // batch was the last O(history) stage of the ingest path).
+                // It runs here, once, on collected batch-sized sets and
+                // returns a local Dataset; old-side vectors are recomputed
+                // from the name, so the batch reads NO vertex rows at all.
+                Link.lshAliasesIncremental(
+                  Link.mentionOccurrences(triples), idx, embedder,
+                  config.linkThreshold, config.linkTopK).toDF()
+              case _ =>
+                // fresh store, or the first lsh batch over an exact-mode
+                // store (no band index yet; materialize signs its vertex
+                // names this batch): one full-universe self-join
+                Link.lshAliases(linkUniverse, config.linkThreshold,
+                  config.linkTopK).toDF()
+            }
+          }.as[AliasPair]
+        case _ => Link.exactAliases(spark) // stock reference behavior
+      }
+      // the full-universe link over an existing store (the first lsh batch
+      // over an exact-mode store, which has no band index) scans the LIVE
+      // vertices listing lazily, and the later bucket-selective vertices
+      // merge DELETES those files; a persist is not durable enough (block
+      // loss → recompute over the stale listing → FileNotFoundException
+      // mid-materialize), so cut the lineage eagerly before any table swap.
+      // Checkpoint-enabled runs re-read the stage's own parquet, and the
+      // band-index path reads only append-only tables — neither needs this.
+      val aliases: Dataset[AliasPair] =
+        if (existingVertices.isDefined && existingBandIndex.isEmpty &&
+            config.checkpointDir.isEmpty)
+          aliasesLazy.localCheckpoint(true)
+        else aliasesLazy
 
-    // when the user signals the mention vocabulary outgrows broadcast
-    // (saltedCanonicalJoin), the CC map joins without a broadcast hint too
-    // (Canonicalize.canonicalMap, solved once for both consumers below)
-    val cc = Canonicalize.connectedComponents(aliases)
-    val canonical = Canonicalize.identityComplete(mentions, cc,
-      broadcastCC = !config.saltedCanonicalJoin)
-    val edges = Materialize.edges(triples)
-    val canonEdges =
-      Materialize.canonicalEdges(edges, canonical, salted = config.saltedCanonicalJoin)
-    // the vertex build maps a name the CC output lacks to itself, so it
-    // takes the linked names only — the incremental link's local result,
-    // with no mention scan to identity-complete it
-    val vertices = Materialize.vertices(triples, mentionVecs, cc,
-      broadcastCanon = !config.saltedCanonicalJoin)
+      // when the user signals the mention vocabulary outgrows broadcast
+      // (saltedCanonicalJoin), the CC map joins without a broadcast hint too
+      // (Canonicalize.canonicalMap, solved once for both consumers below)
+      val cc = Canonicalize.connectedComponents(aliases)
+      val canonical = Canonicalize.identityComplete(mentions, cc,
+        broadcastCC = !config.saltedCanonicalJoin)
+      val edges = Materialize.edges(triples)
+      val canonEdges =
+        Materialize.canonicalEdges(edges, canonical, salted = config.saltedCanonicalJoin)
+      // the vertex build maps a name the CC output lacks to itself, so it
+      // takes the linked names only — the incremental link's local result,
+      // with no mention scan to identity-complete it
+      val vertices = Materialize.vertices(triples, mentionVecs, cc,
+        broadcastCanon = !config.saltedCanonicalJoin)
 
-    Result(docs, chunks, embeddings, terms, triples, mentionVecs, aliases,
-      canonical, edges, canonEdges, vertices, cleanup)
+      Result(docs, chunks, embeddings, terms, triples, mentionVecs, aliases,
+        canonical, edges, canonEdges, vertices, cleanup)
+    } catch { case t: Throwable => cleanup(); throw t }
   }
 
   /** Materialize the graph into MERGE-semantics tables (SURVEY.md §7.4):

@@ -19,16 +19,18 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the store-format gate: a fresh store is stamped with
   *    `format_version` by its first ingest, and a populated store without
   *    the current stamp is refused by ingest and query alike;
-  *  - a batch whose table write throws leaves no cached Dataset behind
-  *    and keeps its `batch_inflight` marker for the crash heal.
+  *  - a batch whose table write throws, or whose `run()` throws after
+  *    pinning its triples, leaves no cached Dataset behind and keeps its
+  *    `batch_inflight` marker for the crash heal.
   */
 class FacadeWarmPathSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSessionFixture.spark
 
   /** Delegating IO that counts every call crossing the table layer;
-    * `failMerge` names a table whose merge throws instead. */
-  final class CountingIO(inner: GraphTableIO, failMerge: String = "")
-      extends GraphTableIO {
+    * `failMerge` names a table whose merge throws instead, and `failRead`
+    * one whose read returns a frame that throws when it is scanned. */
+  final class CountingIO(inner: GraphTableIO, failMerge: String = "",
+      failRead: String = "") extends GraphTableIO {
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val reads = scala.collection.concurrent.TrieMap.empty[String, Int]
     private def n[T](v: T): T = { calls.incrementAndGet(); v }
@@ -36,7 +38,10 @@ class FacadeWarmPathSuite extends AnyFunSuite {
       n(inner.exists(spark, table))
     def read(spark: SparkSession, table: String): DataFrame = {
       reads.updateWith(table)(c => Some(c.getOrElse(0) + 1))
-      n(inner.read(spark, table))
+      val df = n(inner.read(spark, table))
+      if (table != failRead) df
+      else df.filter(org.apache.spark.sql.functions.raise_error(
+        org.apache.spark.sql.functions.lit(s"injected failure at read($table)")).isNull)
     }
     def merge(spark: SparkSession, table: String, delta: DataFrame,
         keys: Seq[String], partitionCols: Seq[String]): Unit =
@@ -142,6 +147,30 @@ class FacadeWarmPathSuite extends AnyFunSuite {
     assert(e.getMessage.contains("merge(vertices)"))
     assert(cached == before,
       s"a failed batch left ${cached - before} cached Dataset(s)")
+    assert(new ParquetTableIO(root).flagSet(spark, "batch_inflight"),
+      "a failed batch must stay marked in flight for the crash heal")
+  }
+
+  test("a batch whose run() throws after pinning its triples releases " +
+      "the pin and stays marked in flight") {
+    val root = java.nio.file.Files.createTempDirectory("graft_runfail").toString
+    val cfg = GraftConfig(linkMode = "lsh")
+    new GraphRag(spark, new ParquetTableIO(root), cfg).ingest(corpusOf(
+      "Zebra imports Yonder. Zebra calls Xylem.",
+      "Yonder extends Walnut. Xylem uses Zebra."))
+    def cached = org.apache.spark.sql.TestCache.entries(spark)
+    val before = cached
+    // the incremental link scans the stored band index inside run(),
+    // after lsh mode has persisted the batch's triples
+    val rag = new GraphRag(spark, new CountingIO(new ParquetTableIO(root),
+      failRead = "lsh_band_index"), cfg)
+    val e = intercept[Exception] {
+      rag.ingest(corpusOf("Walnut imports Zebra. Quartz calls Yonder."))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("read(lsh_band_index)")), e)
+    assert(cached == before,
+      s"a batch failed inside run() left ${cached - before} cached Dataset(s)")
     assert(new ParquetTableIO(root).flagSet(spark, "batch_inflight"),
       "a failed batch must stay marked in flight for the crash heal")
   }

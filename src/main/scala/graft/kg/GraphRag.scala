@@ -294,9 +294,10 @@ final class GraphRag(
     * counts, `cli/main.py:90-104`). Metadata-only: answered from the
     * backend's countable metadata (parquet footer record counts — the
     * Iceberg manifest analogue), zero count() jobs scheduled — the same
-    * path the per-batch ingest stats use, measured ~2.5× cheaper on a
-    * sliver-heavy store (graft.tools.StatsProbe, deleted; source at
-    * commit 957f54b). */
+    * path the per-batch ingest stats use. It reads every data file's
+    * footer, at 0.2–0.3 ms each with the store's read options (7–11 ms
+    * each while every open parsed Hadoop's XML defaults anew;
+    * `ParquetTableIO.Store`). */
   def stats(): Map[String, Long] =
     Seq("chunks", "chunk_embeddings", "chunk_vec_index", "chunk_vec_meta",
       "terms", "edges", "edge_entity_index", "pred_index", "canonical_edges",

@@ -3,6 +3,7 @@ package graft.kg.oracle
 import graft.kg.embed.{Embedder, HashEmbedder}
 import graft.kg.extract.RuleSVOExtractor
 import graft.kg.fixtures.CorpusGen
+import graft.kg.pipeline.StoreFileSystem
 import graft.kg.textspec.Stopwords
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -496,12 +497,14 @@ object KgOracle {
     * must live OUTSIDE the Verify result directory the driver scans —
     * these are oracle INPUTS (read back by the kg_* oracle SQL), not
     * query results, and a dump inside the scanned dir would surface as a
-    * phantom oracle-less query row. */
+    * phantom oracle-less query row. The dump writes through the store's
+    * FileSystem options, which set file modes without a forked `chmod`. */
   def writeExpected(spark: SparkSession, sfDir: String, expectedDir: String): Unit = {
     import spark.implicits._
     val e = new Expected(sfDir)
     def put(name: String, df: DataFrame): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$expectedDir/$name")
+      df.coalesce(1).write.options(StoreFileSystem.Options)
+        .mode("overwrite").parquet(s"$expectedDir/$name")
 
     put("kg_chunks", e.chunks.toDF())
     put("kg_terms", spark.createDataset(e.terms).toDF("chunkId", "text", "termType")

@@ -17,7 +17,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Scoped to the store: [[ParquetTableIO]] and [[Checkpoint]] pass
   * [[Options]] on each of their reads and writes and build their
-  * driver-side instance with [[forRoot]]. The session's Hadoop and SQL
+  * driver-side instance with [[forRoot]]; `KgOracle`'s expected-set dump
+  * passes them on its writes. The session's Hadoop and SQL
   * conf are never touched, so other `file:` paths keep the session's
   * cached FileSystem. */
 final class StoreFileSystem extends LocalFileSystem(new StoreFileSystem.Raw)

@@ -187,6 +187,49 @@ class GraphRagSuite extends AnyFunSuite {
     assert(jobs == 0, s"stats() scheduled $jobs Spark jobs — footer path lost")
   }
 
+  test("ingest and stats() counts are true row counts, " +
+      "whatever filter predicate the session conf carries") {
+    val s = spark; import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graftcounts").toString
+    val io = new graft.kg.pipeline.ParquetTableIO(root)
+    def batch(texts: String*) = spark.createDataset(texts.zipWithIndex.map {
+      case (t, i) => CorpusRow("r", s"${t.hashCode}-$i.scala", "c0", "scala", t)
+    })
+    val exact = GraftConfig(linkMode = "exact")
+    val lsh = GraftConfig(linkMode = "lsh", linkThreshold = 0.7)
+    // exact store, then an lsh batch (it backfills the canonical tables
+    // with a full compaction), then an lsh batch on the delta path
+    val truth = Seq(
+      exact -> batch("BatchEngine imports module parseTree. StoreMap uses dataTree.",
+        "ParseTree depends on mergeLib."),
+      lsh -> batch("Batch engine calls function sortTree."),
+      lsh -> batch("Parse tree extends class mainLib. IndexSet uses scanList.")
+    ).map { case (cfg, docs) =>
+      val rag = new GraphRag(spark, io, cfg)
+      val counts = rag.ingest(docs).filterNot(_._1.startsWith("observed_"))
+      val stats = rag.stats()
+      val truth = stats.keys.map(t => t -> io.read(spark, t).count()).toMap
+      assert(stats == truth, s"${cfg.linkMode} batch")
+      assert(counts == truth.filter(kv => counts.contains(kv._1)), s"${cfg.linkMode} batch")
+      assert(truth("chunk_vec_index") ==
+        graft.kg.retrieve.VectorIndex.NumTables * truth("chunk_embeddings"))
+      truth
+    }.last
+    assert(truth.contains("canonical_edges") && truth.contains("lsh_band_index"))
+    // a predicate on an absent column drops every row group it is applied to
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = org.apache.parquet.hadoop.ParquetInputFormat.FILTER_PREDICATE
+    org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf,
+      org.apache.parquet.filter2.predicate.FilterApi.eq[java.lang.Integer,
+        org.apache.parquet.filter2.predicate.Operators.IntColumn](
+        org.apache.parquet.filter2.predicate.FilterApi.intColumn("no_such_column"),
+        Integer.valueOf(1)))
+    // the store conf is copied at its first use, so the io must be fresh
+    try assert(new GraphRag(spark, new graft.kg.pipeline.ParquetTableIO(root), lsh)
+      .stats() == truth)
+    finally Seq(key, s"$key.human.readable").foreach(conf.unset)
+  }
+
   test("re-ingest is idempotent; stats stable; reset truncates") {
     val before = engine.stats()
     engine.ingest(corpus)
